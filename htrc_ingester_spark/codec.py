@@ -129,15 +129,6 @@ def _dct_basis(n: int) -> np.ndarray:
     return b
 
 
-def _dct2(x: np.ndarray) -> np.ndarray:
-    """Orthonormal 2-D DCT-II via the FFT-free matrix form (32x32 input
-    — the matmul is trivially cheap and exact enough). The basis is
-    cached per size: phash runs per row in Arrow batches and the
-    basis build dominated the matmul (measured)."""
-    basis = _dct_basis(x.shape[0])
-    return basis @ x @ basis.T
-
-
 _GRAY_W = np.array([0.299, 0.587, 0.114])
 
 

@@ -346,17 +346,6 @@ def polygons_grid_wkt(n: int = 10000) -> list[tuple[str, str]]:
     ]
 
 
-def polygons_pdf(seed: int = 42) -> pd.DataFrame:
-    rows = polygons(seed)
-    return pd.DataFrame(
-        {
-            "poly_id": [p["poly_id"] for p in rows],
-            "ring": [[{"lon": a, "lat": b} for a, b in p["ring"]] for p in rows],
-            "kind": [p["kind"] for p in rows],
-        }
-    )
-
-
 def knn_queries_pdf(seed: int = 42) -> pd.DataFrame:
     """kNN query fixtures (FIXTURES.md A3): hot-cluster hits, a remote
     point (forces ≥2 k-ring expansions), and an exact-tie point."""

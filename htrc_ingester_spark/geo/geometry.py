@@ -203,11 +203,3 @@ def ring_bbox(ring_lon, ring_lat):
         lon_min, lon_max = -180.0, 180.0 - 1e-12
     return float(lon_min), float(r_lat.min()), float(lon_max), float(r_lat.max())
 
-
-def point_in_ring_scalar(lon: float, lat: float, ring) -> bool:
-    """Independent slow-path oracle (same convention, scalar loop) used
-    by tests to cross-check the vectorized kernel. ``ring`` is a list of
-    (lon, lat) tuples."""
-    r_lon = np.array([p[0] for p in ring], dtype=np.float64)
-    r_lat = np.array([p[1] for p in ring], dtype=np.float64)
-    return bool(points_in_ring(np.array([lon]), np.array([lat]), r_lon, r_lat)[0])

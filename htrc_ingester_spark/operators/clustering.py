@@ -426,10 +426,10 @@ def kmeans_fit(
         # zero-iteration assignment, so fail at entry
         raise ValueError(f"iters must be >= 1, got {iters}")
     spark = df.sparkSession
-    from .knn_join import _plan_size_bytes
+    from ..session import _plan_size_bytes
 
     est = _plan_size_bytes(df)
-    if 0 <= est <= driver_max_bytes:
+    if driver_max_bytes > 0 and 0 <= est <= driver_max_bytes:
         rows = _np_train_rows(
             _quantize(df, vec_col, id_col, quant, persist=False), dim, id_col
         )
@@ -524,10 +524,10 @@ def pq_fit_encode(
         raise ValueError(f"iters must be >= 1, got {iters}")
     sub = dim // m
     spark = df.sparkSession
-    from .knn_join import _plan_size_bytes
+    from ..session import _plan_size_bytes
 
     est = _plan_size_bytes(df)
-    if 0 <= est <= driver_max_bytes:
+    if driver_max_bytes > 0 and 0 <= est <= driver_max_bytes:
         # driver-bounded regime (graph/dissolve precedent): collect the
         # quantized corpus ONCE and run the m·iters Lloyd rounds in
         # numpy — at bench scale the distributed trainer's wall is pure

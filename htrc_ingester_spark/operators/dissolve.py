@@ -184,8 +184,7 @@ def _cc_loop(nodes: DataFrame, edges: DataFrame, max_rounds: int) -> DataFrame:
     AQE's per-stage replan jobs are pure latency, the same finding as
     knn_join_many/shortest_paths. Big or unknown-size graphs keep AQE
     — that is where per-round skew handling has data to act on."""
-    from ..session import materialize, static_plan
-    from .knn_join import _plan_size_bytes
+    from ..session import _plan_size_bytes, materialize, static_plan
 
     est = _plan_size_bytes(edges)
     run_static = 0 <= est <= (64 << 20)

@@ -141,7 +141,7 @@ def _maybe_broadcast(q: DataFrame, broadcast_queries: bool | None) -> DataFrame:
     force. Un-hinted joins are left to AQE (which can still pick a
     runtime broadcast from actual sizes)."""
     if broadcast_queries is None:
-        from .knn_join import _plan_size_bytes, _size_conf
+        from ..session import _plan_size_bytes, _size_conf
 
         est = _plan_size_bytes(q)
         thresh = _size_conf(

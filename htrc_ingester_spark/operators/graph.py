@@ -97,7 +97,6 @@ def shortest_paths(
         .agg(F.min(_req(weight_col)).alias("_w"))
         .persist()
     )
-    checkpoints: list[DataFrame] = []
     try:
         n_e = _materialize(spark, e)
         # driver_max_edges=0 must force the distributed rounds even on
@@ -176,8 +175,6 @@ def shortest_paths(
         return best
     finally:
         e.unpersist(blocking=False)
-        for cp in checkpoints:
-            cp.unpersist(blocking=False)
 
 
 def _materialize(spark, df: DataFrame) -> int:

@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 
 from ..functions import h3_cell, haversine_m
 from ..geo import h3lite as H
+from ..session import _plan_size_bytes, _size_conf
 
 EARTH_RADIUS_M = 6_371_008.8
 
@@ -206,36 +207,6 @@ def _kx_sql(lat: str, r: str, res: int, bound: str | None = None) -> str:
         f"when {cos_min} <= 0.0d or {s} / {cos_min} >= 1.0d then {nxr} "
         f"else cast(ceil(degrees(2.0d * asin({s} / {cos_min})) / {cw}) as int) + 1 end"
     )
-
-
-def _plan_size_bytes(df: DataFrame) -> int:
-    """Catalyst's optimized-plan size estimate (no action, no scan;
-    parquet sources report real footer sizes). -1 when unavailable —
-    callers then leave the join strategy to AQE."""
-    try:
-        return int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
-    except Exception:
-        return -1
-
-
-def _size_conf(spark: SparkSession, key: str, default: int) -> int:
-    """A Spark size conf in bytes ('10MB', '10485760b', …)."""
-    try:
-        v = spark.conf.get(key).strip().lower()
-    except Exception:
-        return default
-    mult = 1
-    for suf, m in (
-        ("kb", 1024), ("mb", 1024**2), ("gb", 1024**3), ("tb", 1024**4),
-        ("k", 1024), ("m", 1024**2), ("g", 1024**3), ("b", 1),
-    ):
-        if v.endswith(suf):
-            v, mult = v[: -len(suf)], m
-            break
-    try:
-        return int(float(v) * mult)
-    except ValueError:
-        return default
 
 
 def knn_join_many(

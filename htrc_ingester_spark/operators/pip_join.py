@@ -8,9 +8,9 @@ Scale design (the part that must survive 100 TB / 10^12 rows):
    polygon is emitted as ``full`` at the coarsest resolution that fits
    (any point in it matches with NO exact test); a cell the ring
    boundary may cross is subdivided; at ``res_max`` the surviving
-   boundary cells are emitted as ``partial``. The refine UDF therefore
-   only ever sees an O(perimeter / cell_size) shell — measured on the
-   bench pipeline this cut Python-side traffic ~30x vs a single-res
+   boundary cells are emitted as ``partial``. The refine therefore
+   only ever ray-casts an O(perimeter / cell_size) shell — measured on
+   the bench pipeline this cut Python-side traffic ~30x vs a single-res
    cover whose cells were larger than the polygons (all-partial).
 
 2. The cover is a tiny broadcast DataFrame probed in one of two
@@ -26,9 +26,11 @@ Scale design (the part that must survive 100 TB / 10^12 rows):
    (cover, ring broadcast, refine UDF) are content-keyed and memoized
    per session — built once, reused by every invocation.
 
-3. Partial candidates go through ONE Arrow-batched pandas UDF that
-   groups the batch by poly_id and ray-casts each group vectorized
-   (geo.geometry.points_in_ring).
+3. Single pass: one point scan, one probe, one cover broadcast, then
+   ONE Arrow-batched pandas UDF over every candidate that keeps
+   ``full``-cell rows as they are and ray-casts only the ``partial``
+   ones, grouped by poly_id (geo.geometry.points_in_ring). The price:
+   full rows cross the Python boundary too (see :func:`pip_join`).
 
 Classification is conservative-exact: ``full`` requires ALL cell
 corners inside AND no ring-edge bbox overlapping the cell's bbox
@@ -638,36 +640,6 @@ def build_cell_cover(
     )
 
 
-def cover_area_fraction(cover: pd.DataFrame, backend=None) -> float:
-    """Upper bound on the fraction of the globe the cover touches
-    (grid-area sense): Σ 1/num_cells(res) over cover cells. Overlapping
-    polygons double-count — fine for a selectivity heuristic."""
-    be = backend or H3LiteBackend()
-    cells = cover["cell"].to_numpy()
-    if not len(cells):
-        return 0.0
-    res = be.cell_res(cells)
-    frac = 0.0
-    for r in np.unique(res):
-        n_r = int((res == r).sum())
-        frac += n_r / be.num_cells(int(r))
-    return min(1.0, frac)
-
-
-# auto-persist threshold: candidates ≤ ~25% of the point table is worth
-# one materialization to avoid the second scan+probe pass
-_PERSIST_FRACTION = 0.25
-
-# ...but only when that second pass is actually expensive. Persisting
-# inserts an InMemoryRelation that breaks whole-stage codegen at the
-# boundary and pays a columnar cache write; measured at sf0.1 (600k
-# rows) that costs MORE than just recomputing the scan+encode+join for
-# the second branch (1.26 s vs 0.57 s cold). Below this Catalyst size
-# estimate of the point side, recompute wins; above it (the 100-TB
-# regime) a second full scan dwarfs the cache write.
-_PERSIST_MIN_BYTES = 4 << 30
-
-
 def _polys_key(polys: list[dict], res: int, res_max: int, backend_name: str) -> str:
     """Content hash of a polygon set + resolution band + backend — the
     memo key for driver-side index artifacts."""
@@ -752,6 +724,28 @@ def _expand_cover(cover: pd.DataFrame, fine: int, backend=None) -> pd.DataFrame:
     )
 
 
+def _refine_kernel(
+    lon: pd.Series,
+    lat: pd.Series,
+    pid: pd.Series,
+    full: pd.Series,
+    rings: dict[str, list[np.ndarray]],
+) -> np.ndarray:
+    """One Arrow batch of broadcast-regime candidates → keep mask.
+    Rows from ``full`` cover cells pass unchecked; only the ``partial``
+    rows are ray-cast, grouped by poly_id in one pass (a per-unique
+    full-batch mask was O(unique polys × batch rows))."""
+    out = full.to_numpy(dtype=bool).copy()
+    part = np.flatnonzero(~out)
+    if len(part):
+        lon_v = lon.to_numpy(dtype=np.float64)[part]
+        lat_v = lat.to_numpy(dtype=np.float64)[part]
+        groups = pd.Series(part).groupby(pid.to_numpy()[part]).indices
+        for poly_id, ii in groups.items():
+            out[part[ii]] = G.points_in_rings(lon_v[ii], lat_v[ii], rings[poly_id])
+    return out
+
+
 def _cover_artifacts(
     spark: SparkSession, polys: list[dict], res: int, res_max: int, backend=None
 ) -> dict:
@@ -787,24 +781,17 @@ def _cover_artifacts(
     bc_rings = spark.sparkContext.broadcast(rings)
 
     @F.pandas_udf(T.BooleanType())
-    def _refine(lon: pd.Series, lat: pd.Series, pid: pd.Series) -> pd.Series:
-        out = np.zeros(len(lon), dtype=bool)
-        lon_v = lon.to_numpy(dtype=np.float64)
-        lat_v = lat.to_numpy(dtype=np.float64)
-        # single-pass grouping (the _refine_join idiom) — a per-unique
-        # full-batch mask was O(unique polys × batch rows)
-        for poly_id, ii in lon.groupby(pid.to_numpy()).indices.items():
-            out[ii] = G.points_in_rings(lon_v[ii], lat_v[ii], bc_rings.value[poly_id])
-        return pd.Series(out)
+    def _refine(
+        lon: pd.Series, lat: pd.Series, pid: pd.Series, full: pd.Series
+    ) -> pd.Series:
+        return pd.Series(_refine_kernel(lon, lat, pid, full, bc_rings.value))
 
     art = {
-        "cover": cover,
         "cover_df": spark.createDataFrame(cover, schema=schema) if len(cover) else None,
         "refine": _refine,
         "levels": np.sort(np.unique(be.cell_res(cover["cell"].to_numpy()))).tolist()
         if len(cover)
         else [],
-        "frac": cover_area_fraction(cover, backend=be),
         "all_full": bool(cover["full"].all()) if len(cover) else True,
         "_bc": bc_rings,
     }
@@ -813,10 +800,10 @@ def _cover_artifacts(
         old = _ARTIFACT_MEMO.pop(oldest)
         try:
             # unpersist, NOT destroy: previously returned pip_join plans
-            # (including persisted candidate lineages) may still hold the
-            # evicted broadcast in their refine UDF — unpersist frees the
-            # executor copies but lets a later recompute re-send the
-            # value; destroy() would fail such a recompute (ADVICE r4)
+            # may still hold the evicted broadcast in their refine UDF —
+            # unpersist frees the executor copies but lets a later
+            # recompute re-send the value; destroy() would fail such a
+            # recompute (ADVICE r4)
             old["_bc"].unpersist(blocking=False)
         except Exception:
             pass  # context gone
@@ -832,7 +819,6 @@ def pip_join(
     res_max: int | None = None,
     lon_col: str = "lon",
     lat_col: str = "lat",
-    persist_candidates: bool | None = None,
     backend=None,
 ) -> DataFrame:
     """points ⋈ polygons containment join.
@@ -856,23 +842,18 @@ def pip_join(
     at HectorManager.java:508-510 — track drops with a left_anti if
     needed).
 
-    ``persist_candidates``: the full/partial split has two consumers,
-    so without persistence the point scan+probe runs twice. Default
-    ``None`` decides from TWO driver-side estimates: the cover's area
-    fraction (candidate selectivity) AND Catalyst's size estimate of
-    the point side. Selective covers (< ~25% of the grid) over a LARGE
-    point side (≥ 4 GiB estimated) persist the candidate set — at
-    10^12 points that's ≪ one scan's worth of 3-column rows spread
-    across the cluster (MEMORY_AND_DISK, spills, never recomputes).
-    Small point sides skip the persist: the InMemoryRelation boundary
-    breaks whole-stage codegen and the cache write costs more than
-    just recomputing the cheap scan (measured 1.26 s vs 0.57 s cold at
-    sf0.1). Near-global covers also keep the two-scan plan, whose
-    second pass is a column-pruned read cheaper than caching ~the
-    whole table. Pass True/False to override; the persisted frame is
-    left cached for the returned plan (successive invocations with the
-    same polygons canonicalize to the SAME cache entry, so memory does
-    not accumulate).
+    Single pass: the point side is scanned and probed ONCE against
+    ONE broadcast of the cover, and every candidate — full and partial
+    alike — crosses the Arrow boundary into the refine, which keeps
+    full rows unchecked and ray-casts only the partial ones. Splitting
+    the candidates instead (full rows kept in the JVM, partial rows
+    refined, the two unioned) gives the plan two consumers of the
+    probe: Spark then scans, probes and broadcasts twice, or pays a
+    candidate persist whose cache write breaks codegen. Shipping the
+    full rows through Arrow costs less than either: on a 1M-image,
+    16-polygon flagship at local[4] (4-core host) the refine took
+    0.80 M rows instead of 0.59 M (18.9 vs 13.7 MB sent to Python),
+    and the call got faster end to end.
     """
     be = get_backend(backend) if isinstance(backend, (str, type(None))) else backend
     if res_max is None:
@@ -902,44 +883,19 @@ def pip_join(
     # with its ancestor-chain cells (array + explode — narrow,
     # whole-stage codegen). Cover levels are disjoint regions per
     # polygon, so no duplicate hits.
-    #
-    # Scan economics: see the persist_candidates doc — selective covers
-    # persist the candidate set (single point-side scan), near-global
-    # covers re-scan the column-pruned skeleton per branch.
     probe = _probe_cells(points, art["levels"], be, lon_col, lat_col)
     cand = probe.join(
         F.broadcast(art["cover_df"]), F.col("__cell") == F.col("cell"), "inner"
     )
-    if persist_candidates is None:
-        from .knn_join import _plan_size_bytes
-
-        # -1 (stats unavailable) falls into the no-persist branch — the
-        # cheap-recompute default — instead of raising (ADVICE r4)
-        points_bytes = _plan_size_bytes(points)
-        persist_candidates = (
-            art["frac"] <= _PERSIST_FRACTION and points_bytes >= _PERSIST_MIN_BYTES
+    if not art["all_full"]:
+        # one consumer of the probe: the refine passes full rows through
+        # and ray-casts only the O(perimeter) res_max shell
+        cand = cand.where(
+            art["refine"](
+                F.col(lon_col), F.col(lat_col), F.col("poly_id"), F.col("full")
+            )
         )
-    if persist_candidates:
-        # Memory stays bounded across repeated invocations WITHOUT an
-        # explicit unpersist: the memo reuses the same cover_df, so the
-        # candidate plans of successive invocations canonicalize equal
-        # and CacheManager keeps exactly ONE entry (verified: 1
-        # persistent RDD after 10 invocations). Re-invocations reuse it
-        # — steady-state service behavior; benchmarks that want
-        # cold-pipeline numbers clear the cache between reps (bench.py).
-        cand = cand.persist()
-
-    _refine = art["refine"]
-    full_hits = cand.where(F.col("full")).drop("cell", "full", "__cell")
-    if art["all_full"]:
-        return full_hits
-    # only the O(perimeter) res_max shell reaches the Arrow refine
-    partial_hits = (
-        cand.where(~F.col("full"))
-        .where(_refine(F.col(lon_col), F.col(lat_col), F.col("poly_id")))
-        .drop("cell", "full", "__cell")
-    )
-    return full_hits.unionByName(partial_hits)
+    return cand.drop("cell", "full", "__cell")
 
 
 # ---------------------------------------------------------------------------
@@ -1191,7 +1147,7 @@ def pip_join_table(
     # report real stats; unknown stats (LocalRelation / converted-rings
     # lineage, both already sliced ~evenly by createDataFrame or the
     # upstream shuffle) just ensure one task per core.
-    from .knn_join import _plan_size_bytes
+    from ..session import _plan_size_bytes
 
     para = spark.sparkContext.defaultParallelism
     nbytes = _plan_size_bytes(polys_df)

@@ -94,8 +94,10 @@ def ring_metrics(
         .drop("__cl", "__e", "__cross2")
     )
     if round_to is not None:
+        # + 0.0 turns a rounded -0.0 into +0.0 (IEEE: -0.0 + 0.0 = +0.0)
+        # so both dialects print the same zero
         for c in ("signed_area", "area", "perimeter", "centroid_lon", "centroid_lat"):
-            out = out.withColumn(c, F.round(c, round_to))
+            out = out.withColumn(c, F.round(c, round_to) + F.lit(0.0))
     return out
 
 
@@ -121,10 +123,12 @@ def ring_metrics_oracle_sql(ring_values: str, round_to: int = 6) -> str:
       group by 1, 2
     )
     select poly_id, ring_idx,
-           round(cross2 / 2, {round_to}) as signed_area,
-           round(abs(cross2 / 2), {round_to}) as area,
-           round(perim, {round_to}) as perimeter,
-           round(case when cross2 != 0 then cxs / (3 * cross2) end, {round_to}) as centroid_lon,
-           round(case when cross2 != 0 then cys / (3 * cross2) end, {round_to}) as centroid_lat
+           round(cross2 / 2, {round_to}) + 0.0 as signed_area,
+           round(abs(cross2 / 2), {round_to}) + 0.0 as area,
+           round(perim, {round_to}) + 0.0 as perimeter,
+           round(case when cross2 != 0 then cxs / (3 * cross2) end, {round_to}) + 0.0
+             as centroid_lon,
+           round(case when cross2 != 0 then cys / (3 * cross2) end, {round_to}) + 0.0
+             as centroid_lat
     from m order by poly_id, ring_idx
     """

@@ -8,7 +8,7 @@ Catalyst executes with map-side partial aggregation, so the only
 exchange carries ``#polys × #tasks`` partial rows, never per-point
 rows. That makes this plan already optimal at 10^12 points: points are
 never shuffled (the cover join is broadcast), points inside FULL cover
-cells skip the Arrow refine entirely (the pip_join split), and the
+cells skip the ray cast (the pip_join full/partial split), and the
 final shuffle is bounded by the polygon count.
 
 Reference analog: the per-volume page-count / size-metric rollups
@@ -33,7 +33,6 @@ def zonal_stats(
     res_max: int | None = None,
     lon_col: str = "lon",
     lat_col: str = "lat",
-    persist_candidates: bool | None = None,
 ) -> DataFrame:
     """Per-polygon ``(n, sum, avg, min, max)`` of ``value_col`` over the
     points each polygon contains (even-odd multi-ring semantics, same
@@ -48,7 +47,6 @@ def zonal_stats(
         res_max=res_max,
         lon_col=lon_col,
         lat_col=lat_col,
-        persist_candidates=persist_candidates,
     )
     v = F.col(value_col)
     return hits.groupBy("poly_id").agg(

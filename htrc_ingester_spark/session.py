@@ -9,7 +9,7 @@ from __future__ import annotations
 import os
 from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 @contextmanager
@@ -78,6 +78,36 @@ def reliable_checkpoint_configured(spark: SparkSession) -> bool:
         if conf_dir:
             sc.setCheckpointDir(conf_dir)
     return sc.getCheckpointDir() is not None
+
+
+def _plan_size_bytes(df: DataFrame) -> int:
+    """Catalyst's optimized-plan size estimate (no action, no scan;
+    parquet sources report real footer sizes). -1 when unavailable —
+    callers then leave the join strategy to AQE."""
+    try:
+        return int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+    except Exception:
+        return -1
+
+
+def _size_conf(spark: SparkSession, key: str, default: int) -> int:
+    """A Spark size conf in bytes ('10MB', '10485760b', …)."""
+    try:
+        v = spark.conf.get(key).strip().lower()
+    except Exception:
+        return default
+    mult = 1
+    for suf, m in (
+        ("kb", 1024), ("mb", 1024**2), ("gb", 1024**3), ("tb", 1024**4),
+        ("k", 1024), ("m", 1024**2), ("g", 1024**3), ("b", 1),
+    ):
+        if v.endswith(suf):
+            v, mult = v[: -len(suf)], m
+            break
+    try:
+        return int(float(v) * mult)
+    except ValueError:
+        return default
 
 
 def get_spark(

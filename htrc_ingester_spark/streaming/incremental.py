@@ -92,17 +92,23 @@ def parse_batch(batch_df: DataFrame) -> DataFrame:
     not last-writer-wins; the stateful twin collapse_stream_stateful
     always compared (src_file, pos) across batches — this brings the
     MERGE path to the same discipline). File names carry a sortable
-    numeral per the dlog convention (dlog-<ts> / t-<ts>); a name with
-    no digits, a 13+-digit numeral (would overflow the 43-bit pack;
-    epoch SECONDS fit), or a file of ≥2^20 lines fails the batch
-    loudly rather than silently mis-ordering. posexplode of the
-    file's own line array → EXACT within-file order (no dependence on
-    split or partition scheduling)."""
+    numeral per the dlog convention (dlog-<ts> / t-<ts>): the ordinal
+    is the name's ONE digit run. A name with no digits, with more than
+    one digit run (concatenating them would sort ``dlog-2-10`` as 210,
+    after ``dlog-3-1``), with a 13+-digit numeral (would overflow the
+    43-bit pack; epoch SECONDS fit), or a file of ≥2^20 lines fails
+    the batch loudly rather than silently mis-ordering. posexplode of
+    the file's own line array → EXACT within-file order (no dependence
+    on split or partition scheduling)."""
     base = "element_at(split(src_file, '/'), -1)"
-    digits = f"regexp_replace({base}, '[^0-9]', '')"
+    runs = f"regexp_extract_all({base}, '[0-9]+', 0)"
+    digits = f"element_at({runs}, 1)"
     fnum = (
-        f"case when {digits} = '' then"
+        f"case when size({runs}) = 0 then"
         f" cast(raise_error(concat('dlog file name has no numeric ordinal: ', {base})) as long)"
+        f" when size({runs}) > 1 then"
+        f" cast(raise_error(concat('dlog file name has more than one digit run: ', {base}))"
+        f" as long)"
         f" when length({digits}) > 12 then"
         f" cast(raise_error(concat('dlog file-name ordinal too large to order: ', {base})) as long)"
         f" else cast({digits} as long) end"
@@ -445,10 +451,7 @@ def geofence_stream(
     stream-static (the cover is a driver-built broadcast), the refine
     is a stateless pandas UDF, and containment is row-local — so there
     is no state store, no watermark, and late data needs no handling
-    (a late point is just a late hit). The only batch-mode knob that
-    must flip is ``persist_candidates`` (caching a streaming frame is
-    illegal): the full/partial split's second consumer re-reads the
-    micro-batch, which is in-memory by construction.
+    (a late point is just a late hit).
 
     Output == batch ``pip_join`` on the same rows
     (test_streaming.test_geofence_stream_equals_batch, fence set
@@ -478,7 +481,6 @@ def geofence_stream(
         res_max=res_max,
         lon_col=lon_col,
         lat_col=lat_col,
-        persist_candidates=False,
     )
 
 

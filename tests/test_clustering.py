@@ -233,6 +233,20 @@ class TestRegimeParity:
             (r.m, r.cluster, list(r.cv)) for r in book_x.collect()
         )
 
+    @pytest.mark.parametrize("entry", ["kmeans_fit", "pq_fit_encode"])
+    def test_budget_zero_forces_distributed_on_zero_estimate(
+        self, spark, vec_df, monkeypatch, entry
+    ):
+        """An empty LocalRelation estimates 0 bytes, and 0 <= 0 <= 0
+        used to take the driver regime out from under budget 0."""
+        from htrc_ingester_spark.operators import clustering as C
+
+        empty = vec_df.where("vec_id < 0")
+        monkeypatch.setattr(C, "_np_train_rows", lambda *a, **k: pytest.fail("driver"))
+        kw = {"m": 2} if entry == "pq_fit_encode" else {}
+        out, book = getattr(C, entry)(empty, k=3, iters=2, dim=8, driver_max_bytes=0, **kw)
+        assert out.count() == 0 and book.count() == 0
+
     def test_np_quantize_half_up_twin(self):
         """_np_quantize must reproduce Spark round(double)'s HALF_UP
         away-from-zero on exact halves (np.rint alone rounds to even)

@@ -33,6 +33,11 @@ SF = "/root/testdata/sf0.001"
 # (entry, steady_state_jobs) — measured local[4]/sp=4 at sf0.001;
 # stable across 3 consecutive post-warmup runs at pin time.
 PINS = [
+    # single-pass broadcast PIP: one point scan + probe against ONE
+    # cover broadcast, then the tile aggregate and the collect-protocol
+    # orderBy (6 -> 5 when the full/partial union, which broadcast the
+    # cover once per branch, became one refine over all candidates)
+    ("flagship_pip_tiles", 5),
     # driver-bounded numpy trainer (one quantized-corpus collect) +
     # Arrow-kernel encode + explode-free ADC + partial-topk rank
     # (r5: 19 -> 13 via map-side top-k partials, then 13 -> 10 when

@@ -33,13 +33,13 @@ class TestPIPJoinPlan:
         # (broadcast side has the only exchange)
         assert plan.count("Exchange") == plan.count("BroadcastExchange")
 
-    def test_selective_cover_persisted_single_point_scan(self, spark):
-        """Selective covers over a LARGE point side persist the
-        candidate set: both the full and partial branches read the
-        cache, so the point-side parquet scan appears ONCE in the plan
-        (VERDICT r1 #5). Forced here via persist_candidates=True — the
-        auto decision needs a ≥4 GiB Catalyst size estimate, which the
-        test fixture can't provide."""
+    @pytest.mark.parametrize("cover", ["selective", "near_global"])
+    def test_single_pass_plan(self, spark, cover):
+        """The broadcast regime runs in one pass over the point side
+        for selective and near-global covers alike: one parquet scan,
+        one probe against ONE cover broadcast, and one refine over every
+        candidate — no full/partial Union (which scanned, probed and
+        broadcast twice) and no persisted candidate set."""
         pts = (
             spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
             .selectExpr(
@@ -48,20 +48,48 @@ class TestPIPJoinPlan:
                 "cast(l_orderkey % 160 - 80 as double) as lat",
             )
         )
-        out = pip_join(spark, pts, data.polygons(), res=7, persist_candidates=True)
+        if cover == "selective":
+            out = pip_join(spark, pts, data.polygons(), res=7)
+        else:
+            # the intermediate vertices matter: under the shortest-delta
+            # unwrap a ring jumping -179.9 → 179.9 is a thin sliver
+            lons = [float(x) for x in range(-150, 151, 30)]
+            ring = [(x, -80.0) for x in lons] + [(x, 80.0) for x in reversed(lons)]
+            globe = [{"poly_id": "everything", "ring": ring + [ring[0]]}]
+            out = pip_join(spark, pts, globe, res=3, res_max=5)
         plan = plan_of(out)
-        # both branches read the cache (the parquet scan string inside
-        # the printed InMemoryRelation is the cache's lineage, not an
-        # executed scan)
-        assert plan.count("InMemoryTableScan") >= 2
-        out.count()  # the cached plan executes correctly end-to-end
+        assert plan.count("FileScan parquet") == 1
+        assert plan.count("BroadcastExchange") == 1
+        assert "ArrowEvalPython" in plan  # both covers have partial cells
+        assert "Union" not in plan
+        assert "InMemoryTableScan" not in plan
+        n = out.count()
+        if cover == "near_global":
+            # half-open edges: left/bottom in, right/top out
+            assert n == pts.where("lon >= -150 and lon < 150 and lat >= -80").count()
+
+    def test_selective_cover_persisted_single_point_scan(self, spark, tmp_path):
+        """The selective cover reads the point-side parquet once without
+        persisting the candidate set, and that single scan loses no
+        rows: the result equals the same join over the points handed in
+        as a local DataFrame (a plan with no parquet scan at all). The
+        points cluster on the polygons so the join has matches."""
+        pdf = data.images_meta_pdf(2000)[["image_id", "lon", "lat"]]
+        pdf.to_parquet(tmp_path / "pts.parquet", index=False)
+        pts = spark.read.parquet(str(tmp_path / "pts.parquet"))
+        out = pip_join(spark, pts, data.polygons(), res=7)
+        assert plan_of(out).count("FileScan parquet") == 1
+        assert "InMemoryTableScan" not in plan_of(out)
+        ref = pip_join(spark, spark.createDataFrame(pdf), data.polygons(), res=7)
+        key = ["image_id", "poly_id"]
+        got = out.select(*key).toPandas().sort_values(key, ignore_index=True)
+        want = ref.select(*key).toPandas().sort_values(key, ignore_index=True)
+        assert len(got) > 0
+        pd.testing.assert_frame_equal(got, want)
 
     def test_small_input_skips_persist(self, spark):
-        """Below the persist size floor the default plan recomputes the
-        cheap scan instead of paying the InMemoryRelation codegen break
-        + cache write (measured 1.26 s vs 0.57 s cold at sf0.1)."""
-        # drop the equivalent cache entry the forced-persist test above
-        # registered — cached plans apply to ANY canonically-equal query
+        """The default plan never caches: no InMemoryTableScan in the
+        plan, and running it leaves Spark's cache manager empty."""
         spark.catalog.clearCache()
         pts = (
             spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
@@ -73,31 +101,8 @@ class TestPIPJoinPlan:
         )
         out = pip_join(spark, pts, data.polygons(), res=7)
         assert "InMemoryTableScan" not in plan_of(out)
-
-    def test_global_cover_keeps_two_scan_plan(self, spark):
-        """A near-global cover must NOT persist ~everything — the
-        fallback is the two-scan plan. The rectangle needs intermediate
-        vertices: under the shortest-delta unwrap convention a ring
-        jumping -179.9 → 179.9 is a thin antimeridian sliver, not a
-        wide box."""
-        lons = list(range(-150, 151, 30))
-        ring = (
-            [(float(x), -80.0) for x in lons]
-            + [(float(lons[-1]), 80.0)]
-            + [(float(x), 80.0) for x in reversed(lons)]
-            + [(float(lons[0]), -80.0)]
-        )
-        globe = [{"poly_id": "everything", "ring": ring}]
-        pts = (
-            spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
-            .selectExpr(
-                "cast(l_orderkey as bigint) as image_id",
-                "cast(l_orderkey % 360 - 180 as double) as lon",
-                "cast(l_orderkey % 160 - 80 as double) as lat",
-            )
-        )
-        out = pip_join(spark, pts, globe, res=3, res_max=5)
-        assert "InMemoryTableScan" not in plan_of(out)
+        out.count()
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
     def test_codegen_covers_encode(self, spark):
         # AQE wraps the plan and hides codegen marks until runtime;

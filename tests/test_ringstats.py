@@ -49,3 +49,32 @@ class TestRingMetrics:
         )
         plan = ring_metrics(df)._jdf.queryExecution().optimizedPlan().toString()
         assert "Exchange" not in plan and "exchange" not in plan
+
+    def test_rounded_zeros_are_positive_in_both_dialects(self, spark):
+        """DuckDB's round() kept the sign of a tiny negative measure
+        (Spark's does not): a clockwise sliver (signed area -5e-9) and a
+        ring centred just below the origin (centroid -1e-7) printed -0.0
+        in the oracle and 0.0 in Spark, which a bit-level value hash
+        tells apart. Both dialects normalise zeros after rounding."""
+        import duckdb
+
+        from htrc_ingester_spark.operators.ringstats import ring_metrics_oracle_sql
+
+        a, b = -1.0000001, 1.9999999
+        rings = [
+            ("sliver", [(0.0, 0.0), (0.0, 1e-4), (1e-4, 0.0), (0.0, 0.0)]),
+            ("near_origin", [(a, a), (a, b), (b, a), (a, a)]),
+        ]
+        cols = "poly_id, signed_area, area, perimeter, centroid_lon, centroid_lat"
+        got = ring_metrics(spark.createDataFrame(rings, _SCHEMA), round_to=6)
+        vals = ", ".join(
+            f"('{p}', 0, {i}, {x!r}::double, {y!r}::double)"
+            for p, verts in rings
+            for i, (x, y) in enumerate(verts)
+        )
+        rel = f"(select * from (values {vals}) t(poly_id, ring_idx, pt_idx, lon, lat))"
+        want = duckdb.sql(f"select {cols} from ({ring_metrics_oracle_sql(rel, 6)})")
+        got_r = sorted(tuple(r) for r in got.selectExpr(*cols.split(", ")).collect())
+        want_r = sorted(want.fetchall())
+        assert repr(got_r) == repr(want_r)  # repr tells -0.0 from 0.0
+        assert sum(v == 0.0 for r in got_r for v in r[1:]) == 4

@@ -147,6 +147,35 @@ def oracle_point_in_rings(lon, lat, rings):
     return inside
 
 
+class TestRefineKernel:
+    def test_mixed_full_partial_batch_is_full_or_raycast(self):
+        """One batch interleaving full and partial rows of several
+        polygons (one with a hole) keeps exactly ``full | ray-cast``,
+        row for row: full rows pass even where the ray cast says out,
+        partial rows are ray-cast against their own poly_id's rings."""
+        from htrc_ingester_spark.operators.pip_join import _refine_kernel, poly_rings
+
+        polys = data.polygons_holes() + data.polygons()[:2]
+        rings = {str(p["poly_id"]): poly_rings(p) for p in polys}
+        rng = np.random.default_rng(7)
+        pid = rng.choice(list(rings), size=600)
+        box = {p: np.concatenate(r) for p, r in rings.items()}
+        lo = np.array([box[p].min(axis=0) - 0.1 for p in pid])
+        hi = np.array([box[p].max(axis=0) + 0.1 for p in pid])
+        lon, lat = (lo + rng.random(lo.shape) * (hi - lo)).T
+        full = rng.random(len(pid)) < 0.4
+        cast = np.array(
+            [
+                oracle_point_in_rings(x, y, [r.tolist() for r in rings[p]])
+                for x, y, p in zip(lon, lat, pid)
+            ]
+        )
+        # both verdicts occur on each side of the split
+        assert all(0 < cast[side].sum() < side.sum() for side in (full, ~full))
+        got = _refine_kernel(*map(pd.Series, (lon, lat, pid, full)), rings)
+        np.testing.assert_array_equal(got, full | cast)
+
+
 class TestPIPJoinHoles:
     def test_matches_pure_python_oracle_on_multi_ring_fixture(
         self, spark, images_df, images_pdf

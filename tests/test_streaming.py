@@ -1022,3 +1022,25 @@ def test_geofence_stream_refuses_table_regime_fence_sets(spark):
     )
     with _pytest.raises(ValueError, match="fence polygons"):
         S.geofence_stream(spark, stream, big)
+
+
+class TestDlogOrdinal:
+    """The file-name ordinal behind parse_batch's cross-batch ``seq``."""
+
+    def _seqs(self, spark, names):
+        batch = spark.createDataFrame(
+            [("root/ab/uc2,ark+=13960=ta.zip\n", f"file:/logs/{n}") for n in names],
+            "value string, src_file string",
+        )
+        return [r.seq for r in S.parse_batch(batch).orderBy("seq").collect()]
+
+    def test_single_digit_run_orders_by_timestamp(self, spark):
+        assert self._seqs(spark, ["dlog-1700000001", "dlog-1700000000"]) == [
+            1700000000 << 20,
+            1700000001 << 20,
+        ]
+
+    def test_two_digit_runs_raise(self, spark):
+        # concatenating the runs made dlog-2-10 sort as 210, after dlog-3-1
+        with pytest.raises(Exception, match="more than one digit run: dlog-2-10"):
+            self._seqs(spark, ["dlog-2-10"])
