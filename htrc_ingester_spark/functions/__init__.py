@@ -133,16 +133,10 @@ def pairtree_clean_id(col: Column | str) -> Column:
     return F.translate(c, ":/.", "+=,")
 
 
-def pairtree_unclean_id(col: Column | str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.translate(c, "+=,", ":/.")
-
-
 def pairtree_path(id_col: Column | str, segment_len: int = 2) -> Column:
     """Cleaned ID → 2-char-segment directory path, NO trailing slash
     (the reference's content-addressed partitioning,
-    HectorToolBridge.java:267-280). The single canonical segmentation
-    helper — sources/filesystem builds file paths on top of it."""
+    HectorToolBridge.java:267-280)."""
     c = pairtree_clean_id(id_col)
     return F.regexp_replace(F.regexp_replace(c, "(..)", "$1/"), "/$", "")
 
@@ -152,15 +146,3 @@ def zero_pad_seq(order_col: Column | str, width: int = 8) -> Column:
     (Util.java:186-195 prepadString)."""
     c = F.col(order_col) if isinstance(order_col, str) else order_col
     return F.lpad(c.cast("string"), width, "0")
-
-
-def add_trailing_slash(col: Column | str) -> Column:
-    """C3 (Util.java:53-59)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.when(c.endswith("/"), c).otherwise(F.concat(c, F.lit("/")))
-
-
-def path_depth(col: Column | str) -> Column:
-    """F3 path-depth (PathDepthFilter.java:69-92): number of segments."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.size(F.split(F.regexp_replace(c, "^/|/$", ""), "/"))

@@ -128,11 +128,11 @@ def connected_components(
     the distinct-cell count is grid-bounded) is collected and labeled
     with numpy union-find in one pass; larger sets run the distributed
     pointer-jumping loop (one action per round, O(log diameter)
-    rounds)."""
+    rounds). A budget ≤ 0 forces the loop, even for an empty input."""
     spark = cells.sparkSession
     distinct = cells.select(F.col(cell_col).cast("long").alias("cell")).distinct()
     n_cells = distinct.count()
-    if n_cells <= driver_max_cells:
+    if driver_max_cells > 0 and n_cells <= driver_max_cells:
         import pandas as pd
 
         cells_np = distinct.toPandas()["cell"].to_numpy()
@@ -241,11 +241,12 @@ def connected_components_edges(
     graphs, not grids): small edge lists (≤ ``driver_max_edges``, e.g.
     a near-dup pair set, which is ≪ corpus by construction) collect to
     a driver union-find; larger ones run the distributed
-    pointer-jumping loop."""
+    pointer-jumping loop. A budget ≤ 0 forces the loop, even for an
+    empty edge list."""
     spark = edges.sparkSession
     e2 = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).persist()
     n_edges = e2.count()
-    if n_edges <= driver_max_edges:
+    if driver_max_edges > 0 and n_edges <= driver_max_edges:
         import pandas as pd
 
         pdf = e2.toPandas()

@@ -29,39 +29,38 @@ Termination uses STRICT ``<``: at exactly the bound an unsearched point
 could tie on distance and win on image_id.
 
 Scale notes: only the (image_id, lon, lat, cell) skeleton is ever
-joined or shuffled — never image bytes. The per-round shuffles touch
-unresolved queries × ring cells only; per-query state is ONE row with
-the running top-k as a sorted array<struct>. Radius quadruples per
-round: O(log r_final) Spark jobs, and the total frontier area is
-dominated by the last round.
+joined or shuffled — never image bytes. Per-query state is ONE row
+with the running top-k as a sorted array<struct>, hash-partitioned by
+query_id into spark.sql.shuffle.partitions once, so every round runs
+on every core whatever the query frame's own partitioning. The
+per-round work touches unresolved queries × ring cells only. Each
+round is ONE Spark action: its materialization also yields the
+still-active count and the duplicate-query-id check (observed
+metrics), and the returned frame is lazy over the last round's state. Radius quadruples per round:
+O(log r_final) actions, and the total frontier area is dominated by
+the last round.
 """
 
 from __future__ import annotations
 
+from contextlib import nullcontext
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import h3_cell, haversine_m
 from ..geo import h3lite as H
-from ..session import _plan_size_bytes, _size_conf
+from ..session import _plan_size_bytes, _size_conf, materialize, static_plan
 
 EARTH_RADIUS_M = 6_371_008.8
 
 
-def _required_kx(bound_m: float, lat_q: float, r: int, res: int) -> int:
-    """Columns of lon half-width needed so every point nearer than
-    ``bound_m`` inside the covered rows is in a covered cell."""
-    return int(
-        _required_kx_batch(
-            np.array([bound_m]), np.array([lat_q]), np.array([r]), res
-        )[0]
-    )
-
-
 def _required_kx_batch(bound_m: np.ndarray, lat_q: np.ndarray, r: np.ndarray, res: int) -> np.ndarray:
-    """Vectorized ``_required_kx`` over all active queries at once."""
+    """Columns of lon half-width needed so every point nearer than
+    ``bound_m`` inside the covered rows is in a covered cell, per
+    query (numpy twin of ``_kx_sql``)."""
     ch = H.cell_h_deg(res)
     cw = H.cell_w_deg(res)
     nxr = H.nx(res)
@@ -110,14 +109,8 @@ def knn_join(
 
     Thin convenience wrapper over :func:`knn_join_many` — the pandas
     frame becomes a Spark DataFrame and all per-query search state
-    lives in Spark. (VERDICT r3 #5: the old driver-state loop this
-    wrapper replaces kept a parallel top-k merge implementation that
-    had to stay tie-identical with knn_join_many and round-tripped
-    candidates through toPandas every round; knn_join_many is
-    rank-identical — the same ring schedule, termination bound, and
-    (dist_m, image_id) total order — and strictly more scalable.
-    :func:`knn_join_bruteforce` remains the independent oracle.)
-    """
+    lives in Spark. :func:`knn_join_bruteforce` is the independent
+    oracle."""
     qdf = _queries_to_df(spark, queries).select(
         F.col("query_id"),
         F.col("lon").alias(lon_col),
@@ -179,17 +172,13 @@ def knn_join_bruteforce(
 
 
 # ---------------------------------------------------------------------------
-# Fully distributed kNN: the query side is a DataFrame (scales to 10^6+
-# query points — the driver holds only per-round counters, never
-# per-query state). Same ring-expansion algorithm and the same proven
-# termination bound as knn_join, but the frontier construction, the
-# anisotropic width (kx), and the convergence test are all Spark
-# expressions over the query table.
+# Fully distributed kNN: the query side is a DataFrame, and per-query
+# state never leaves Spark (a round returns only its observed counts).
 # ---------------------------------------------------------------------------
 
 
 def _kx_sql(lat: str, r: str, res: int, bound: str | None = None) -> str:
-    """SQL twin of _required_kx: lon half-width (in cells) covering the
+    """SQL twin of _required_kx_batch: lon half-width (in cells) covering the
     distance ``bound`` (default: the ring-termination bound r·cell_h)
     at row-band latitudes. Full wrap (nx) when the bound exceeds the
     band's capacity."""
@@ -206,6 +195,53 @@ def _kx_sql(lat: str, r: str, res: int, bound: str | None = None) -> str:
         f"case when {bound} >= {np.pi * EARTH_RADIUS_M} then {nxr} "
         f"when {cos_min} <= 0.0d or {s} / {cos_min} >= 1.0d then {nxr} "
         f"else cast(ceil(degrees(2.0d * asin({s} / {cos_min})) / {cw}) as int) + 1 end"
+    )
+
+
+def _query_cells(queries: DataFrame, res: int, lon_col: str, lat_col: str, *extra) -> DataFrame:
+    """(query_id, q_lon, q_lat, *extra, x0, y0): typed query
+    coordinates and the column/row of the query's cell."""
+    return (
+        queries.select(
+            F.col("query_id").cast("string").alias("query_id"),
+            F.col(lon_col).cast("double").alias("q_lon"),
+            F.col(lat_col).cast("double").alias("q_lat"),
+            *extra,
+        )
+        .select("*", h3_cell("q_lon", "q_lat", res).alias("_c0"))
+        .select(
+            "*",
+            F.expr(f"cast((_c0 div {1 << 28}) % {1 << 28} as int)").alias("x0"),
+            F.expr(f"cast(_c0 % {1 << 28} as int)").alias("y0"),
+        )
+        .drop("_c0")
+    )
+
+
+def _disk_cells(df: DataFrame, res: int, r: str, kx: str, keep: str | None = None) -> DataFrame:
+    """(query_id, q_lon, q_lat, cell) for every cell within ``r`` rows
+    (clamped at the poles) and ``kx`` columns (wrapped, capped at nx/2)
+    of each row's (x0, y0) — SQL expressions both — keeping only the
+    (dx, dy) offsets where the SQL predicate ``keep`` holds. The dx
+    range is truncated on the high side when a full wrap would emit
+    the same column at both extremes (2·kx+1 > nx): pmod maps any
+    window of ≤ nx offsets injectively, so the disk needs no
+    dropDuplicates exchange."""
+    nxr, nyr = H.nx(res), H.ny(res)
+    disk = df.select(
+        "*",
+        F.expr(f"least({kx}, {nxr // 2})").alias("_kx"),
+        F.explode(F.expr(f"sequence(greatest(-{r}, -y0), least({r}, {nyr - 1} - y0))")).alias("dy"),
+    ).select("*", F.explode(F.expr(f"sequence(-_kx, least(_kx, {nxr} - 1 - _kx))")).alias("dx"))
+    if keep is not None:
+        disk = disk.where(keep)
+    return disk.select(
+        "query_id", "q_lon", "q_lat",
+        F.expr(
+            f"cast({res} as bigint) * {1 << 56}"
+            f" + cast(pmod(x0 + dx, {nxr}) as bigint) * {1 << 28}"
+            f" + cast(y0 + dy as bigint)"
+        ).alias("cell"),
     )
 
 
@@ -229,27 +265,23 @@ def knn_join_many(
     r·cell_h bound (or the grid is exhausted). Deterministic:
     (dist_m, image_id) total order everywhere.
 
-    State layout (the round-2→3 perf rework): ONE row per query, with
-    the running top-k as a sorted ``array<struct<dist_m, image_id>>``
-    column. Each round is exactly two keyed exchanges — the
-    candidate ``groupBy(query_id).collect_list`` and the state⋈agg
-    merge join — where the previous row-per-neighbor layout paid a
-    window shuffle over ALL retained rows (done queries re-ranked
-    every round) plus a separate stats aggregation. Merging, the
-    convergence test, and ranking are all array expressions
-    (``array_sort``/``slice``) on that single row; struct comparison
-    sorts (dist_m asc, image_id asc), the same total order the window
-    used. Still one Spark action per round.
+    State: ONE row per query, the running top-k a sorted
+    ``array<struct<dist_m, image_id>>`` (struct order is the (dist_m,
+    image_id) order), hash-partitioned by ``query_id`` into
+    ``spark.sql.shuffle.partitions`` once, so every round's explode,
+    probe and haversine run on every partition whatever the query
+    frame's own partitioning. With the points broadcast, the candidate
+    ``groupBy(query_id).collect_list`` and its merge into the state
+    shuffle nothing. ONE Spark action per round: its materialization
+    also reports the still-active count and the duplicate-query-id
+    check through ``DataFrame.observe``. The returned frame is lazy
+    over the final state.
 
-    Scale: per-round shuffles touch only unresolved queries × ring
-    cells and their candidate matches; state carries one row (≤ k
-    neighbors) per query. A round's per-query collect_list buffer is
-    bounded by the ×4 ring-growth schedule (the round that first
-    reaches neighbors sees ~16× the minimal disk's points); a single
-    pathologically hot cell concentrates in one buffer the same way it
-    concentrated in one window partition before — salt upstream if a
-    cell can exceed executor memory. Worst-case frontier (a query in
-    an empty region growing to the whole grid) degrades to the
+    Scale: a round's per-query collect_list buffer is bounded by the
+    ×4 ring-growth schedule (the round that first reaches neighbors
+    sees ~16× the minimal disk's points); a pathologically hot cell
+    concentrates in one buffer — salt upstream if a cell can exceed
+    executor memory. A query in an empty region degrades to the
     brute-force scan it genuinely requires.
     """
     ch_m = H.cell_h_deg(res) * H.M_PER_DEG_LAT
@@ -283,192 +315,147 @@ def knn_join_many(
         skel = skel.repartition("cell")
     skel = skel.persist()
 
-    # duplicate query_ids would silently corrupt results: the per-round
-    # groupBy(query_id) merges candidates across the duplicate rows, so
-    # each absorbs neighbors with distances measured to the OTHER row's
-    # coordinates. One tiny agg over the (small-by-design) query table
-    # catches it up front.
-    dup = (
-        queries.groupBy("query_id")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .where("_n > 1")
-        .limit(1)
-        .collect()
-    )
-    if dup:
-        raise ValueError(
-            f"knn_join_many: duplicate query_id {dup[0]['query_id']!r} — "
-            "query ids must be unique (per-query state is keyed on them)"
+    # r = 0, pkx = -1: the first ring excludes nothing (|dx| <= -1).
+    # k <= 0 asks for nothing: born done with an empty topk (the
+    # bruteforce twin's rank <= 0 likewise yields no rows). Also keeps
+    # the done-check's topk[k - 1] from evaluating a NEGATIVE index,
+    # which throws under ANSI.
+    # The explicit partition count is the round's groupBy(query_id)
+    # count, so AQE cannot coalesce it back to the input's (often
+    # single) partition. Cached with AQE off, the state reports that
+    # partitioning to the round plans (an adaptive cached plan hides
+    # it, costing round 1 a state exchange and a candidate exchange).
+    # Lazy persist: round 1 consumes the state twice, and it is
+    # dropped once round 1 is materialized.
+    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    with static_plan(spark):
+        init_state = state = (
+            _query_cells(queries, res, lon_col, lat_col, F.col("k").cast("int").alias("k"))
+            .select(
+                "*",
+                F.lit(0).alias("r"),
+                F.lit(-1).alias("pkx"),
+                F.expr("k <= 0").alias("done"),
+                F.expr(empty_topk).alias("topk"),
+            )
+            .repartition(n_parts, "query_id")
+            # duplicate query_ids would silently corrupt results: the
+            # per-round groupBy(query_id) merges candidates across the
+            # duplicate rows, so each absorbs neighbors with distances
+            # measured to the OTHER row's coordinates. Each row carries
+            # its id's row count (a window within the query_id
+            # partitions, no exchange), checked after every round.
+            .select("*", F.count(F.lit(1)).over(Window.partitionBy("query_id")).alias("_n"))
+            .persist()
         )
-
-    state = (
-        queries.select(
-            F.col("query_id").cast("string"),
-            F.col(lon_col).alias("q_lon").cast("double"),
-            F.col(lat_col).alias("q_lat").cast("double"),
-            F.col("k").cast("int"),
-        )
-        .withColumn("_c0", h3_cell("q_lon", "q_lat", res))
-        .withColumn("x0", F.expr(f"cast((_c0 div {1 << 28}) % {1 << 28} as int)"))
-        .withColumn("y0", F.expr(f"cast(_c0 % {1 << 28} as int)"))
-        .drop("_c0")
-        .withColumn("r", F.lit(0))
-        .withColumn("pkx", F.lit(-1))
-        .withColumn("pr", F.lit(-1))
-        # k <= 0 asks for nothing: born done with an empty topk (the
-        # bruteforce twin's rank <= 0 likewise yields no rows). Also
-        # keeps the done-check's topk2[k - 1] from evaluating a
-        # NEGATIVE index, which throws under ANSI
-        .withColumn("done", F.expr("k <= 0"))
-        .withColumn("topk", F.expr(empty_topk))
-        # lazy persist (round 1 consumes it twice); round outputs are
-        # eager localCheckpoints, so this is dropped after round 1
-        .persist()
-    )
-    init_state: DataFrame | None = state
 
     # Each round materializes via session.materialize (eager
-    # localCheckpoint, or reliable checkpoint when a checkpoint dir /
-    # spark.htrc.checkpointDir is configured — the executor-loss story
-    # at cluster scale), which also TRUNCATES the plan: the round plan
-    # references the previous
-    # state twice (grow + merge join), so a persist-only loop doubles
-    # the analyzed plan per round and Catalyst itself OOMs/stalls at
-    # high round counts (found via dissolve._cc_loop; same shape
-    # here). The filtered count after it is a block-cached scan that
-    # doubles as the active-query check. No up-front count: round 1's
-    # frontier is every query by construction, so the loop enters
-    # directly (an empty query set just runs one empty round).
+    # localCheckpoint, or reliable checkpoint when a checkpoint dir is
+    # configured), which also TRUNCATES the plan: the round plan
+    # references the previous state twice (grow + merge join), so a
+    # persist-only loop doubles the analyzed plan per round until
+    # Catalyst stalls. The active count and the duplicate check ride the
+    # same action as observed metrics. No up-front count: round 1's
+    # frontier is every query by construction (an empty query set runs
+    # one empty round).
     n_active: int | None = None
-    for _ in range(max_rounds):
-        if n_active == 0:
-            break
-        # grow: r *= 4 (2 on the first round); recompute kx at new r.
-        # Resolved rows keep their values (no wasted asin on them).
-        grown = state.withColumn(
-            "r_new",
-            F.expr(f"case when done then r when r = 0 then 2 else least(r * 4, {nyr}) end"),
-        ).withColumn(
-            "kx_new",
-            F.expr(
-                f"case when done then pkx else cast({_kx_sql('q_lat', 'r_new', res)} as int) end"
-            ),
-        )
-
-        # frontier ring: dy ∈ [-r, r] rows (clamped), dx wrapped and
-        # capped at nx/2, minus the previous disk rectangle. The dx
-        # range is truncated on the high side when a full wrap would
-        # emit the same column at both extremes (2·kx+1 > nx): pmod
-        # maps any window of ≤ nx offsets injectively, so no
-        # dropDuplicates exchange is needed (the previous layout paid
-        # one per round).
-        ring = (
-            grown.where("not done")
-            .withColumn(
-                "dy", F.explode(F.expr(f"sequence(greatest(-r_new, -y0), least(r_new, {nyr - 1} - y0))"))
-            )
-            .withColumn("kx_c", F.expr(f"least(kx_new, {nxr // 2})"))
-            .withColumn("dx_hi", F.expr(f"least(kx_c, {nxr} - 1 - kx_c)"))
-            .withColumn("dx", F.explode(F.expr("sequence(-kx_c, dx_hi)")))
-            .where(~((F.expr("abs(dx)") <= F.expr(f"least(pkx, {nxr // 2})")) & (F.expr("abs(dy)") <= F.col("pr"))))
-            .withColumn(
-                "cell",
+    try:
+        for rnd in range(max_rounds):
+            if n_active == 0:
+                break
+            # grow: r *= 4 (2 on the first round); recompute kx at new r.
+            # Resolved rows keep their values (no wasted asin on them).
+            grown = state.select(
+                "*",
+                F.expr(f"case when done then r when r = 0 then 2 else least(r * 4, {nyr}) end").alias("r_new"),
+            ).select(
+                "*",
                 F.expr(
-                    f"cast({res} as bigint) * {1 << 56}"
-                    f" + cast(pmod(x0 + dx, {nxr}) as bigint) * {1 << 28}"
-                    f" + cast(y0 + dy as bigint)"
-                ),
+                    f"case when done then pkx else cast({_kx_sql('q_lat', 'r_new', res)} as int) end"
+                ).alias("kx_new"),
             )
-            .select("query_id", "q_lon", "q_lat", "cell")
-        )
 
-        cand_agg = (
-            (F.broadcast(skel) if broadcast_skel else skel).join(ring, "cell", "inner")
-            .withColumn("dist_m", haversine_m("q_lat", "q_lon", "p_lat", "p_lon"))
-            .groupBy("query_id")
-            .agg(F.collect_list(F.struct(F.col("dist_m"), F.col("image_id"))).alias("cands"))
-        )
+            # frontier ring: the new disk minus the previous one (r × pkx)
+            ring = _disk_cells(
+                grown.where("not done"), res, "r_new", "kx_new",
+                keep=f"not (abs(dx) <= least(pkx, {nxr // 2}) and abs(dy) <= r)",
+            )
 
-        new_state = (
-            grown.join(cand_agg, "query_id", "left")
-            .withColumn(
-                "topk2",
-                F.expr(f"slice(array_sort(concat(topk, coalesce(cands, {empty_topk}))), 1, k)"),
+            cand_agg = (
+                (F.broadcast(skel) if broadcast_skel else skel).join(ring, "cell", "inner")
+                .groupBy("query_id")
+                .agg(F.collect_list(F.struct(
+                    haversine_m("q_lat", "q_lon", "p_lat", "p_lon").alias("dist_m"), "image_id"
+                )).alias("cands"))
             )
-            .withColumn(
-                "exhausted",
-                F.expr(f"r_new >= greatest(y0, {nyr - 1} - y0) and kx_new >= {nxr // 2}"),
-            )
-            # `k > 0 and size(topk2) >= k` short-circuits before the
-            # index under codegen, so topk2[k - 1] only ever evaluates
-            # in-bounds (ANSI throws on both negative and >= size
-            # indices; k <= 0 rows are additionally born done)
-            .withColumn(
-                "done2",
-                F.expr(
-                    f"done or exhausted or "
-                    f"(k > 0 and size(topk2) >= k"
-                    f" and topk2[k - 1].dist_m < r_new * {ch_m!r}d)"
-                ),
-            )
-            .select(
-                "query_id", "q_lon", "q_lat", "k", "x0", "y0",
+
+            merged = grown.join(cand_agg, "query_id", "left").select(
+                "query_id", "q_lon", "q_lat", "k", "x0", "y0", "_n",
                 F.col("r_new").alias("r"),
                 F.col("kx_new").alias("pkx"),
-                F.col("r_new").alias("pr"),
-                F.col("done2").alias("done"),
-                F.col("topk2").alias("topk"),
+                "done",
+                # same order as array_sort (elements are never NULL), but
+                # without a lambda comparator evaluated per comparison,
+                # which cost half of round 1's executor time
+                F.expr(f"slice(sort_array(concat(topk, coalesce(cands, {empty_topk}))), 1, k)").alias("topk"),
             )
-        )
-        if broadcast_skel:
+            # `k > 0 and size(topk) >= k` short-circuits before the index
+            # under codegen, so topk[k - 1] only ever evaluates in-bounds
+            # (ANSI throws on both negative and >= size indices; k <= 0
+            # rows are additionally born done). The second disjunct is
+            # grid exhaustion.
+            new_state = merged.select(
+                "query_id", "q_lon", "q_lat", "k", "x0", "y0", "_n", "r", "pkx",
+                F.expr(
+                    f"done or (r >= greatest(y0, {nyr - 1} - y0) and pkx >= {nxr // 2}) or "
+                    f"(k > 0 and size(topk) >= k and topk[k - 1].dist_m < r * {ch_m!r}d)"
+                ).alias("done"),
+                "topk",
+            )
+            obs = Observation()
+            new_state = new_state.observe(
+                obs,
+                F.count(F.when(~F.col("done"), 1)).alias("active"),
+                F.max("_n").alias("n"),
+                F.max_by("query_id", "_n").alias("dup"),
+            )
             # pinned-broadcast regime: the round plan is narrow + one
             # groupBy over known-small state — AQE's per-stage
             # materialize/replan jobs are pure latency here
             # (session.static_plan). The huge-skel regimes keep AQE for
             # per-round skew handling.
-            from ..session import materialize, static_plan
-
-            with static_plan(spark):
-                new_state = materialize(new_state)
-                n_active = new_state.where("not done").count()
-        else:
-            from ..session import materialize
-
-            new_state = materialize(new_state)
-            n_active = new_state.where("not done").count()
-        state = new_state
-        if init_state is not None:
-            init_state.unpersist()
-            init_state = None
+            with static_plan(spark) if broadcast_skel else nullcontext():
+                state = materialize(new_state)
+            if rnd == 0:
+                init_state.unpersist()
+            n_active, n, dup = (obs.get[c] for c in ("active", "n", "dup"))
+            if n is not None and n > 1:
+                raise ValueError(
+                    f"knn_join_many: duplicate query_id {dup!r} — "
+                    "query ids must be unique (per-query state is keyed on them)"
+                )
+    finally:
+        # the result reads only the materialized state, never skel
+        skel.unpersist()
 
     # the contract is EXACT rank-1..k kNN: emitting a best-so-far topk
     # for queries the round budget didn't resolve would be silently
     # wrong (missing true neighbors), indistinguishable from exact
-    # output. Normal termination always resolves (the `exhausted`
-    # flag covers grid exhaustion); only an undersized max_rounds
-    # reaches here.
-    remaining = (
-        state.where("not done").count() if n_active is None else n_active
-    )
+    # output. Normal termination always resolves (the grid-exhaustion
+    # disjunct covers that); only an undersized max_rounds reaches here.
+    remaining = state.where("not done").count() if n_active is None else n_active
     if remaining:
         raise RuntimeError(
             f"knn_join_many: {remaining} queries still unresolved after "
             f"max_rounds={max_rounds} ring expansions — raise max_rounds"
         )
 
-    out = (
-        state.select("query_id", F.posexplode("topk").alias("pos", "nb"))
-        .select(
-            "query_id",
-            F.col("nb.image_id").cast("string").alias("image_id"),
-            F.col("nb.dist_m").alias("dist_m"),
-            (F.col("pos") + 1).cast("int").alias("rank"),
-        )
+    return state.select("query_id", F.posexplode("topk").alias("pos", "nb")).select(
+        "query_id",
+        F.col("nb.image_id").cast("string").alias("image_id"),
+        F.col("nb.dist_m").alias("dist_m"),
+        (F.col("pos") + 1).cast("int").alias("rank"),
     )
-    out = out.persist()
-    out.count()
-    skel.unpersist()
-    return out
 
 
 def knn_auto_res(n_points: int, k: int = 5) -> int:
@@ -583,9 +570,7 @@ def radius_join(
     matches, like one kNN round; no per-query driver state."""
     if res is None:
         res = radius_res(radius_m)
-    ch_m = H.cell_h_deg(res) * H.M_PER_DEG_LAT
-    nxr, nyr = H.nx(res), H.ny(res)
-    r_rows = int(np.ceil(radius_m / ch_m))
+    r_rows = int(np.ceil(radius_m / (H.cell_h_deg(res) * H.M_PER_DEG_LAT)))
 
     carry = list(carry_cols or [])
     skel = points.select(
@@ -595,45 +580,8 @@ def radius_join(
         h3_cell(lon_col, lat_col, res).alias("cell"),
         *[F.col(c) for c in carry],
     )
-    q = (
-        queries.select(
-            F.col("query_id").cast("string"),
-            F.col(lon_col).alias("q_lon").cast("double"),
-            F.col(lat_col).alias("q_lat").cast("double"),
-        )
-        .withColumn("_c0", h3_cell("q_lon", "q_lat", res))
-        .withColumn("x0", F.expr(f"cast((_c0 div {1 << 28}) % {1 << 28} as int)"))
-        .withColumn("y0", F.expr(f"cast(_c0 % {1 << 28} as int)"))
-        .drop("_c0")
-        .withColumn(
-            "kx",
-            F.expr(_kx_sql("q_lat", str(r_rows), res, bound=f"cast({radius_m!r} as double)")).cast("int"),
-        )
-    )
-    disk = (
-        q.withColumn(
-            "dy",
-            F.explode(F.expr(f"sequence(greatest(-{r_rows}, -y0), least({r_rows}, {nyr - 1} - y0))")),
-        )
-        .withColumn("kx_c", F.expr(f"least(kx, {nxr // 2})"))
-        # truncate the high side when a full wrap would alias the two
-        # extreme columns (the ring's dx_hi mechanism in knn_join_many):
-        # pmod maps any window of ≤ nx offsets injectively, so the disk
-        # needs NO dropDuplicates exchange — the previous layout paid a
-        # full shuffle of |queries| × |disk| rows per call for a case
-        # the truncation eliminates for free
-        .withColumn("dx_hi", F.expr(f"least(kx_c, {nxr} - 1 - kx_c)"))
-        .withColumn("dx", F.explode(F.expr("sequence(-kx_c, dx_hi)")))
-        .withColumn(
-            "cell",
-            F.expr(
-                f"cast({res} as bigint) * {1 << 56}"
-                f" + cast(pmod(x0 + dx, {nxr}) as bigint) * {1 << 28}"
-                f" + cast(y0 + dy as bigint)"
-            ),
-        )
-        .select("query_id", "q_lon", "q_lat", "cell")
-    )
+    kx = _kx_sql("q_lat", str(r_rows), res, bound=f"cast({radius_m!r} as double)")
+    disk = _disk_cells(_query_cells(queries, res, lon_col, lat_col), res, str(r_rows), kx)
     return (
         skel.join(disk, "cell")
         .withColumn("dist_m", haversine_m("q_lat", "q_lon", "p_lat", "p_lon"))

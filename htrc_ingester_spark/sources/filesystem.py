@@ -3,9 +3,10 @@
 The reference materializes a pairtree (volume id ⇒ 2-char-segment
 directory path, gov.loc pairtree spec) via rsync fan-out
 (REF/rsync/Rsyncker.java:279-376) and streams zips from it
-(HectorManager.java:430-524). Spark-native: the id→path projection is
-a column expression (functions.pairtree_path), and the read is the
-``binaryFile`` data source — parallelism comes from input splits, not
+(HectorManager.java:430-524). Spark-native: the id→file-name
+projection is a column expression (functions.pairtree_clean_id) matched
+against a listing's leaf names, and the read is the ``binaryFile`` data
+source — parallelism comes from input splits, not
 a hand-rolled thread pool (SURVEY.md §2.1 S2).
 
 ``read_pairtree`` joins the listing back to the requested ids so the
@@ -20,7 +21,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions import pairtree_clean_id, pairtree_path
+from ..functions import pairtree_clean_id
 
 
 def clean_volume_id(volume_id: str) -> str:
@@ -31,14 +32,6 @@ def clean_volume_id(volume_id: str) -> str:
     of which dropped the ``.`` rule, so fixture member names diverged
     from real pairtree naming for every dotted volume id)."""
     return volume_id.replace(":", "+").replace("/", "=").replace(".", ",")
-
-
-def pairtree_rel_path(id_col) -> F.Column:
-    """volume id → relative pairtree file path
-    ``ab/cd/../<cleaned>.zip`` (2-char segments of the cleaned id,
-    HectorToolBridge.java:267-280)."""
-    c = pairtree_clean_id(id_col)
-    return F.concat(pairtree_path(id_col), F.lit("/"), c, F.lit(".zip"))
 
 
 def write_pairtree(df: DataFrame, root: str, id_col: str = "volume_id",

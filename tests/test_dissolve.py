@@ -27,6 +27,19 @@ def cells_df(spark, xy, res: int = RES, values=None):
     return spark.createDataFrame(pdf)
 
 
+@pytest.mark.parametrize("entry,schema,kw", [
+    ("connected_components", "cell long", {"res": RES, "driver_max_cells": 0}),
+    ("connected_components_edges", "id_a long, id_b long", {"driver_max_edges": 0}),
+])
+def test_zero_budget_forces_loop_on_empty_input(spark, monkeypatch, entry, schema, kw):
+    """A budget of 0 must run the distributed loop even with no input
+    rows (0 <= 0 used to take the driver path)."""
+    calls, real = [], DV._cc_loop
+    monkeypatch.setattr(DV, "_cc_loop", lambda *a: calls.append(1) or real(*a))
+    out = getattr(DV, entry)(spark.createDataFrame([], schema), **kw)
+    assert out.count() == 0 and calls == [1]
+
+
 class TestConnectedComponents:
     def test_two_blobs_and_a_snake(self, spark):
         # blob A: 2x2 at (10,10); blob B: single cell at (50,50);

@@ -62,10 +62,20 @@ PINS = [
     # the projection actually has (16 was tuned to a 3-column frame
     # and under-derived res by one step, tripling the mutual-kNN
     # bench wall) — at THIS tiny fixture the corrected n lands one
-    # res finer, costing one extra expansion round
-    ("knn_join_distributed", 14),
+    # res finer, costing one extra expansion round; then 14 -> 7 when
+    # each round became its materialize alone: the active count and the
+    # duplicate-query-id check are observed metrics of it (no count or
+    # duplicate-check jobs), the output is no longer persisted and
+    # counted, and the query state is cached from a non-adaptive plan
+    # (its repartition runs inside round 1's job, not as a stage job)
+    ("knn_join_distributed", 7),
     # banded LSH pair-gen (single exchange) + pointer-jumping CC
     ("dedup_image_clusters", 13),
+    # CDC MERGE round-trip (not iterative): delta-log parse, the
+    # last-writer window collapse persisted once, then the tombstone
+    # anti-join + upsert overlay and the per-source count — a stray
+    # action in the ingest-side merge path shows up here
+    ("cdc_merge_apply", 9),
     # seeded Lloyd under the driver-bounded regime: one
     # quantized-corpus collect + a map-only Arrow argmin assign
     # (r5: 11 -> 7; the per-iteration (cluster,pos) exchanges only

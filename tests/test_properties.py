@@ -120,11 +120,11 @@ def test_knn_required_kx_covers_bound(lat_q, r, res):
     """The anisotropic width must cover every point nearer than the
     bound within the row band: verify via direct haversine at the
     worst-covered longitude edge."""
-    from htrc_ingester_spark.operators.knn_join import EARTH_RADIUS_M, _required_kx
+    from htrc_ingester_spark.operators.knn_join import EARTH_RADIUS_M, _required_kx_batch
 
     ch = H.cell_h_deg(res)
     bound = r * ch * H.M_PER_DEG_LAT
-    kx = _required_kx(bound, lat_q, r, res)
+    kx = int(_required_kx_batch(np.array([bound]), np.array([lat_q]), np.array([r]), res)[0])
     if kx >= H.nx(res):  # full wrap always covers
         return
     # worst case geometry: query at the right edge of its cell, point

@@ -450,6 +450,51 @@ class TestKNNMany:
         ).toPandas()
         assert list(got.sort_values("rank").image_id) == list(want.sort_values("rank").image_id)
 
+    def test_round_runs_on_every_shuffle_partition(self, spark, images_df):
+        """A one-partition query frame (one small file, one
+        createDataFrame) must not run a round's frontier explode, probe
+        and partial collect_list in one task: the query state is
+        hash-partitioned into spark.sql.shuffle.partitions. Read from
+        the status stores, which work with the UI disabled."""
+        import re
+        import uuid
+
+        from htrc_ingester_spark.operators.knn_join import knn_join_many
+
+        def it(seq):
+            i = seq.iterator()
+            while i.hasNext():
+                yield i.next()
+
+        q = spark.createDataFrame(data.knn_queries_pdf()).coalesce(1)
+        sc, tag = spark.sparkContext, f"knn-rounds-{uuid.uuid4().hex[:8]}"
+        sc.addJobTag(tag)
+        try:
+            knn_join_many(spark, images_df, q, res=7)
+        finally:
+            sc.removeJobTag(tag)
+        jsc = sc._jsc.sc()
+        jsc.listenerBus().waitUntilEmpty(10_000)
+        status, sql = jsc.statusStore(), spark._jsparkSession.sharedState().statusStore()
+        job_ids = {j.jobId() for j in it(status.jobsList(None)) if tag in set(it(j.jobTags()))}
+        tasks = []
+        for e in it(sql.executionsList()):
+            if not any(int(j) in job_ids for j in it(e.jobs().keys())):
+                continue
+            vals = sql.executionMetrics(e.executionId())
+            for node in it(sql.planGraph(e.executionId()).allNodes()):
+                for m in it(node.metrics()):
+                    v = vals.get(m.accumulatorId())
+                    if ("partial_collect_list" not in node.desc()
+                            or m.name() != "time in aggregation build" or not v.isDefined()):
+                        continue
+                    # a timing metric names the stage of its slowest
+                    # task; one task prints a bare value instead
+                    sids = re.findall(r"\(stage (\d+)\.\d+: task \d+\)", v.get())
+                    tasks += [status.lastStageAttempt(int(s)).numTasks() for s in sids] or [1]
+        assert tasks, "no candidate collect_list found under the job tag"
+        assert set(tasks) == {int(spark.conf.get("spark.sql.shuffle.partitions"))}
+
 
 class TestKNNDispatch:
     def test_auto_dispatch_respects_custom_column_names(self, spark):
