@@ -38,6 +38,8 @@ import pandas as pd  # module-level: pandas_udf type hints are stringized
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import _plan_size_bytes, fits
+
 __all__ = [
     "kmeans_lite",
     "kmeans_fit",
@@ -208,8 +210,8 @@ def _encode_udf(book_rows, m: int, sub: int, quant: int):
 # this run the Lloyd rounds in vectorized numpy on the driver — one
 # collect of the quantized frame instead of 2·iters tiny barrier
 # stages whose wall is pure scheduler latency. Larger corpora (the
-# 100-TB regime) run the distributed grouped-Lloyd plan unchanged;
-# pass driver_max_bytes=0 to force it.
+# 100-TB regime) run the distributed grouped-Lloyd plan unchanged.
+# The gate is session.fits(source estimate, this budget).
 _DRIVER_TRAIN_MAX_BYTES = 64 << 20
 
 
@@ -405,20 +407,19 @@ def kmeans_fit(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     quant: int = 1000,
-    persist_input: bool = True,
-    driver_max_bytes: int = _DRIVER_TRAIN_MAX_BYTES,
 ) -> tuple[DataFrame, DataFrame]:
     """(assignment (id, cluster), centroids (cluster, cv)) after
     ``iters`` Lloyd iterations — centroids are in quantized space.
 
-    Corpora whose Catalyst source estimate is ≤ ``driver_max_bytes``
-    train on the driver (one collect + vectorized numpy rounds) and
-    rebuild the RETURNED assignment as a distributed map-only Arrow
-    argmin over the final-iteration centroids — the output stays a
-    scale-correct distributed frame; only the k×dim model state rides
-    the driver. Trajectory is bit-identical to the distributed plan
-    (same seeding, argmin total order, floor-mean update — pinned by
-    the regime-parity test). Pass 0 to force the distributed trainer.
+    Corpora whose Catalyst source estimate fits
+    ``_DRIVER_TRAIN_MAX_BYTES`` (``session.fits``) train on the driver
+    (one collect + vectorized numpy rounds) and rebuild the RETURNED
+    assignment as a distributed map-only Arrow argmin over the
+    final-iteration centroids — the output stays a scale-correct
+    distributed frame; only the k×dim model state rides the driver.
+    Trajectory is bit-identical to the distributed plan (same seeding,
+    argmin total order, floor-mean update — pinned by the
+    regime-parity test).
     """
     if iters < 1:
         # iters=0 used to crash obscurely (the distributed loop never
@@ -426,10 +427,7 @@ def kmeans_fit(
         # zero-iteration assignment, so fail at entry
         raise ValueError(f"iters must be >= 1, got {iters}")
     spark = df.sparkSession
-    from ..session import _plan_size_bytes
-
-    est = _plan_size_bytes(df)
-    if driver_max_bytes > 0 and 0 <= est <= driver_max_bytes:
+    if fits(_plan_size_bytes(df), _DRIVER_TRAIN_MAX_BYTES):
         rows = _np_train_rows(
             _quantize(df, vec_col, id_col, quant, persist=False), dim, id_col
         )
@@ -468,7 +466,7 @@ def kmeans_fit(
         )
         return assign, centroids
 
-    qt = _quantize(df, vec_col, id_col, quant, persist_input)
+    qt = _quantize(df, vec_col, id_col, quant, persist=True)
     assign, centroids = _lloyd(qt, k, iters, dim, id_col)
     return assign.select(id_col, "cluster"), centroids
 
@@ -481,14 +479,10 @@ def kmeans_lite(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     quant: int = 1000,
-    persist_input: bool = True,
-    driver_max_bytes: int = _DRIVER_TRAIN_MAX_BYTES,
 ) -> DataFrame:
     """Final (``id_col``, cluster:int) assignment after ``iters`` Lloyd
     iterations from the deterministic md5 seeding."""
-    return kmeans_fit(
-        df, k, iters, dim, vec_col, id_col, quant, persist_input, driver_max_bytes
-    )[0]
+    return kmeans_fit(df, k, iters, dim, vec_col, id_col, quant)[0]
 
 
 # ---------------------------------------------------------------------------
@@ -505,15 +499,14 @@ def pq_fit_encode(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     quant: int = 1000,
-    driver_max_bytes: int = _DRIVER_TRAIN_MAX_BYTES,
 ) -> tuple[DataFrame, DataFrame]:
     """Train ``m`` independent sub-codebooks (Lloyd, shared seeding ids)
     and encode every vector as ``m`` codes.
 
-    Corpora whose Catalyst source estimate is ≤ ``driver_max_bytes``
-    train on the driver (one collect + vectorized numpy rounds,
-    bit-identical trajectory); larger ones run the distributed grouped
-    Lloyd plan. Pass 0 to force the distributed trainer.
+    Corpora whose Catalyst source estimate fits
+    ``_DRIVER_TRAIN_MAX_BYTES`` (``session.fits``) train on the driver
+    (one collect + vectorized numpy rounds, bit-identical trajectory);
+    larger ones run the distributed grouped Lloyd plan.
 
     Returns (codes (id, codes array<int> length m),
     codebook (m, cluster, cv) — quantized-space sub-centroids).
@@ -524,10 +517,7 @@ def pq_fit_encode(
         raise ValueError(f"iters must be >= 1, got {iters}")
     sub = dim // m
     spark = df.sparkSession
-    from ..session import _plan_size_bytes
-
-    est = _plan_size_bytes(df)
-    if driver_max_bytes > 0 and 0 <= est <= driver_max_bytes:
+    if fits(_plan_size_bytes(df), _DRIVER_TRAIN_MAX_BYTES):
         # driver-bounded regime (graph/dissolve precedent): collect the
         # quantized corpus ONCE and run the m·iters Lloyd rounds in
         # numpy — at bench scale the distributed trainer's wall is pure

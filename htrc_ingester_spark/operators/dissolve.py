@@ -34,10 +34,13 @@ pointer-jumping scheme.
 
 from __future__ import annotations
 
+from contextlib import nullcontext
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..geo import h3lite as H
+from ..session import _plan_size_bytes, fits, materialize, static_plan
 
 
 def _unpack(cell: str) -> tuple[str, str, str]:
@@ -111,6 +114,13 @@ def _cc_driver(cells_np, res: int):
 # polygon index does. Above it (fine grids at planetary fill), the
 # pointer-jumping loop takes over.
 _DRIVER_MAX_CELLS = 2_000_000
+# collect-and-union-find (connected_components_edges) or numpy
+# Bellman-Ford (graph.shortest_paths) below this many edges: a 2M-edge
+# int64 adjacency is ≈ 48 MB on the driver
+_DRIVER_MAX_EDGES = 2_000_000
+# _cc_loop runs its rounds under session.static_plan when the edge
+# set's Catalyst estimate fits this budget
+_STATIC_LOOP_MAX_BYTES = 64 << 20
 
 
 def connected_components(
@@ -118,27 +128,26 @@ def connected_components(
     res: int,
     cell_col: str = "cell",
     max_rounds: int = 64,
-    driver_max_cells: int = _DRIVER_MAX_CELLS,
 ) -> DataFrame:
     """(cell, comp) labels: ``comp`` is the MINIMUM cell id of the
     component — deterministic across partitionings and cluster sizes.
 
     Two regimes, same contract: a cell set that fits the driver
-    (≤ ``driver_max_cells``, ~16 bytes/cell — the common case, since
-    the distinct-cell count is grid-bounded) is collected and labeled
-    with numpy union-find in one pass; larger sets run the distributed
-    pointer-jumping loop (one action per round, O(log diameter)
-    rounds). A budget ≤ 0 forces the loop, even for an empty input."""
+    (its distinct-cell count ``session.fits`` ``_DRIVER_MAX_CELLS``,
+    ~16 bytes/cell — the common case, since that count is
+    grid-bounded) is collected and labeled with numpy union-find in
+    one pass; larger sets run the distributed pointer-jumping loop
+    (one action per round, O(log diameter) rounds)."""
     spark = cells.sparkSession
     distinct = cells.select(F.col(cell_col).cast("long").alias("cell")).distinct()
-    n_cells = distinct.count()
-    if driver_max_cells > 0 and n_cells <= driver_max_cells:
+    if fits(distinct.count(), _DRIVER_MAX_CELLS):
         import pandas as pd
 
         cells_np = distinct.toPandas()["cell"].to_numpy()
         c, comp = _cc_driver(cells_np, res)
+        # explicit schema: Spark cannot infer one from an empty frame
         out = spark.createDataFrame(
-            pd.DataFrame({"cell": c, "comp": comp})
+            pd.DataFrame({"cell": c, "comp": comp}), "cell long, comp long"
         ).persist()
         out.count()
         return out
@@ -179,23 +188,18 @@ def _cc_loop(nodes: DataFrame, edges: DataFrame, max_rounds: int) -> DataFrame:
     ``spark.cleaner.referenceTracking.cleanCheckpoints=true``, which
     ``session.get_spark`` sets — see session.materialize).
 
-    Small edge sets (Catalyst estimate ≤ 64 MB) run their per-round
+    Small edge sets (Catalyst estimate fits
+    ``_STATIC_LOOP_MAX_BYTES``, 64 MB) run their per-round
     materializations static (session.static_plan): bounded state means
     AQE's per-stage replan jobs are pure latency, the same finding as
     knn_join_many/shortest_paths. Big or unknown-size graphs keep AQE
     — that is where per-round skew handling has data to act on."""
-    from ..session import _plan_size_bytes, materialize, static_plan
-
-    est = _plan_size_bytes(edges)
-    run_static = 0 <= est <= (64 << 20)
+    run_static = fits(_plan_size_bytes(edges), _STATIC_LOOP_MAX_BYTES)
 
     def _mat(df: DataFrame) -> tuple[DataFrame, int]:
-        if run_static:
-            with static_plan(df.sparkSession):
-                out = materialize(df)
-                return out, out.where("_chg").count()
-        out = materialize(df)
-        return out, out.where("_chg").count()
+        with static_plan(df.sparkSession) if run_static else nullcontext():
+            out = materialize(df)
+            return out, out.where("_chg").count()
 
     state = materialize(nodes)
     for _ in range(max_rounds):
@@ -228,52 +232,55 @@ def _cc_loop(nodes: DataFrame, edges: DataFrame, max_rounds: int) -> DataFrame:
     return state
 
 
+def _uf_edges(pdf):
+    """The driver regime of ``connected_components_edges``: union-find
+    over the (src, dst) rows of ``pdf``. Returns (node, cluster), the
+    cluster being the component's minimum node id."""
+    import pandas as pd
+
+    parent: dict = {}
+
+    def find(a):
+        while parent[a] != a:
+            parent[a] = parent[parent[a]]
+            a = parent[a]
+        return a
+
+    for a, b in zip(pdf["src"], pdf["dst"]):
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[rb] = ra
+    comp_min: dict = {}
+    for n in parent:
+        r = find(n)
+        m = comp_min.get(r)
+        if m is None or n < m:
+            comp_min[r] = n
+    return pd.DataFrame(
+        {"node": list(parent), "cluster": [comp_min[find(n)] for n in parent]}
+    )
+
+
 def connected_components_edges(
     edges: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
     max_rounds: int = 64,
-    driver_max_edges: int = 2_000_000,
 ) -> DataFrame:
     """(node, cluster) for every node of an arbitrary undirected edge
     list — ``cluster`` is the MINIMUM node id of the component. The
     general-graph sibling of :func:`connected_components` (dedup pair
-    graphs, not grids): small edge lists (≤ ``driver_max_edges``, e.g.
-    a near-dup pair set, which is ≪ corpus by construction) collect to
-    a driver union-find; larger ones run the distributed
-    pointer-jumping loop. A budget ≤ 0 forces the loop, even for an
-    empty edge list."""
+    graphs, not grids): small edge lists (the edge count
+    ``session.fits`` ``_DRIVER_MAX_EDGES``, e.g. a near-dup pair set,
+    which is ≪ corpus by construction) collect to a driver union-find;
+    larger ones run the distributed pointer-jumping loop."""
     spark = edges.sparkSession
     e2 = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).persist()
-    n_edges = e2.count()
-    if driver_max_edges > 0 and n_edges <= driver_max_edges:
-        import pandas as pd
-
-        pdf = e2.toPandas()
+    if fits(e2.count(), _DRIVER_MAX_EDGES):
+        rows = _uf_edges(e2.toPandas())
         e2.unpersist()
-        parent: dict = {}
-
-        def find(a):
-            while parent[a] != a:
-                parent[a] = parent[parent[a]]
-                a = parent[a]
-            return a
-
-        for a, b in zip(pdf["src"], pdf["dst"]):
-            parent.setdefault(a, a)
-            parent.setdefault(b, b)
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[rb] = ra
-        comp_min: dict = {}
-        for n in parent:
-            r = find(n)
-            m = comp_min.get(r)
-            if m is None or n < m:
-                comp_min[r] = n
-        rows = pd.DataFrame(
-            {"node": list(parent), "cluster": [comp_min[find(n)] for n in parent]}
-        )
         # explicit schema from the EDGE column type: an empty pandas
         # frame has object dtypes Spark cannot infer from, so a clean
         # corpus (zero near-dup pairs) crashed here with

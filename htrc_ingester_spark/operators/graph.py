@@ -37,9 +37,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..session import materialize as session_materialize
-from ..session import reliable_checkpoint_configured
-from ..session import static_plan as static_plan_ctx
+from ..session import fits, materialize, static_plan
+from . import dissolve
 
 __all__ = ["shortest_paths"]
 
@@ -52,7 +51,6 @@ def shortest_paths(
     dst_col: str = "dst",
     weight_col: str = "w",
     persist_every: int | None = None,
-    driver_max_edges: int = 2_000_000,
 ) -> DataFrame:
     """(node, dist) for every node reachable from any of ``sources``
     within ``hops`` edges, dist = min total integer weight.
@@ -62,12 +60,13 @@ def shortest_paths(
     by (src, dst) — at scale this is the materialized adjacency you'd
     bucket-partition by src and reuse across queries).
 
-    Collapsed adjacencies ≤ ``driver_max_edges`` run the rounds in
-    ONE vectorized numpy Bellman-Ford on the driver — the same bounded
-    driver-trivial regime as dissolve's union-find (a 2M-edge int64
+    A collapsed adjacency whose edge count ``session.fits``
+    ``dissolve._DRIVER_MAX_EDGES`` runs the rounds in ONE vectorized
+    numpy Bellman-Ford on the driver — the same bounded driver-trivial
+    regime (and budget) as dissolve's union-find (a 2M-edge int64
     adjacency ≈ 48 MB; a 6-round distributed walk over a few hundred
     surviving edges is pure scheduler latency). Larger graphs run the
-    distributed iterative join+min-agg rounds; pass 0 to force them.
+    distributed iterative join+min-agg rounds.
     """
     if hops < 0:
         raise ValueError("hops must be >= 0")
@@ -98,43 +97,9 @@ def shortest_paths(
         .persist()
     )
     try:
-        n_e = _materialize(spark, e)
-        # driver_max_edges=0 must force the distributed rounds even on
-        # an EMPTY collapsed adjacency (0 <= 0 silently took the driver
-        # path out from under the force-distributed parity tests)
-        if driver_max_edges > 0 and n_e <= driver_max_edges:
-            pdf = e.toPandas()
-            src_a = pdf["_src"].to_numpy(dtype=np.int64)
-            dst_a = pdf["_dst"].to_numpy(dtype=np.int64)
-            w_a = pdf["_w"].to_numpy(dtype=np.int64)
-            if len(w_a) and hops > 0:
-                wmax = int(w_a.max())
-                if wmax > 0 and wmax > (np.iinfo(np.int64).max - 1) // hops:
-                    # numpy int64 wraps SILENTLY (a huge negative then
-                    # wins every min); the distributed/ANSI and oracle
-                    # paths throw — fail loudly in this regime too
-                    raise ValueError(
-                        f"edge weights up to {wmax} can overflow int64 "
-                        f"within {hops} hops — rescale the weights"
-                    )
-            s_a = np.unique(np.asarray(list(sources), dtype=np.int64))
-            nodes = np.unique(np.concatenate([src_a, dst_a, s_a]))
-            si = np.searchsorted(nodes, src_a)
-            di = np.searchsorted(nodes, dst_a)
-            inf = np.iinfo(np.int64).max
-            dist = np.full(len(nodes), inf, dtype=np.int64)
-            dist[np.searchsorted(nodes, s_a)] = 0
-            for _ in range(hops):
-                reach = dist[si] != inf
-                nd = dist.copy()
-                np.minimum.at(nd, di[reach], dist[si[reach]] + w_a[reach])
-                if np.array_equal(nd, dist):
-                    break  # fixpoint: remaining rounds are no-ops
-                dist = nd
-            keep = dist != inf
+        if fits(_materialize(spark, e), dissolve._DRIVER_MAX_EDGES):
             out = spark.createDataFrame(
-                pd.DataFrame({"node": nodes[keep], "dist": dist[keep]}),
-                "node long, dist long",
+                _np_bellman_ford(e.toPandas(), sources, hops), "node long, dist long"
             ).persist()
             _materialize(spark, out)
             return out
@@ -149,21 +114,14 @@ def shortest_paths(
                 best.unionByName(cand).groupBy("node").agg(F.min("dist").alias("dist"))
             )
             if persist_every and (i + 1) % persist_every == 0 and i + 1 < hops:
-                if reliable_checkpoint_configured(spark):
-                    # cluster regime: the periodic cut goes to the
-                    # fault-tolerant checkpoint dir (truncates the plan
-                    # AND survives executor loss mid-walk); run it
-                    # static like every other internal action
-                    with static_plan_ctx(spark):
-                        best = best.checkpoint(True)
-                else:
-                    # materialize = eager localCheckpoint: TRUNCATES
-                    # the lineage (each round references `best` twice,
-                    # so the analyzed plan doubles per round — persist()
-                    # cached data but kept the doubling plan, the exact
-                    # driver-OOM failure dissolve._cc_loop documents)
-                    with static_plan_ctx(spark):
-                        best = session_materialize(best)
+                # session.materialize TRUNCATES the lineage (each round
+                # references `best` twice, so the analyzed plan doubles
+                # per round — persist() cached data but kept the
+                # doubling plan, the driver-OOM failure dissolve._cc_loop
+                # documents); with a checkpoint dir configured the cut
+                # is fault-tolerant. Static like every internal action.
+                with static_plan(spark):
+                    best = materialize(best)
         # cache hygiene (ADVICE r3, matching the dissolve discipline):
         # materialize the result ONCE; the adjacency and any stray
         # intermediates release in the finally below — ALSO on failure,
@@ -177,6 +135,41 @@ def shortest_paths(
         e.unpersist(blocking=False)
 
 
+def _np_bellman_ford(pdf: pd.DataFrame, sources: list[int], hops: int) -> pd.DataFrame:
+    """The driver regime of ``shortest_paths``: ONE vectorized numpy
+    Bellman-Ford over the collapsed adjacency ``pdf`` (_src, _dst, _w).
+    Returns (node, dist) for every reached node."""
+    src_a = pdf["_src"].to_numpy(dtype=np.int64)
+    dst_a = pdf["_dst"].to_numpy(dtype=np.int64)
+    w_a = pdf["_w"].to_numpy(dtype=np.int64)
+    if len(w_a) and hops > 0:
+        wmax = int(w_a.max())
+        if wmax > 0 and wmax > (np.iinfo(np.int64).max - 1) // hops:
+            # numpy int64 wraps SILENTLY (a huge negative then
+            # wins every min); the distributed/ANSI and oracle
+            # paths throw — fail loudly in this regime too
+            raise ValueError(
+                f"edge weights up to {wmax} can overflow int64 "
+                f"within {hops} hops — rescale the weights"
+            )
+    s_a = np.unique(np.asarray(list(sources), dtype=np.int64))
+    nodes = np.unique(np.concatenate([src_a, dst_a, s_a]))
+    si = np.searchsorted(nodes, src_a)
+    di = np.searchsorted(nodes, dst_a)
+    inf = np.iinfo(np.int64).max
+    dist = np.full(len(nodes), inf, dtype=np.int64)
+    dist[np.searchsorted(nodes, s_a)] = 0
+    for _ in range(hops):
+        reach = dist[si] != inf
+        nd = dist.copy()
+        np.minimum.at(nd, di[reach], dist[si[reach]] + w_a[reach])
+        if np.array_equal(nd, dist):
+            break  # fixpoint: remaining rounds are no-ops
+        dist = nd
+    keep = dist != inf
+    return pd.DataFrame({"node": nodes[keep], "dist": dist[keep]})
+
+
 def _materialize(spark, df: DataFrame) -> int:
     """Execute an internal checkpoint/result count with AQE OFF
     (session.static_plan): bounded small per-round state means there
@@ -188,8 +181,6 @@ def _materialize(spark, df: DataFrame) -> int:
     Callers with genuinely skewed billion-edge graphs get their skew
     handling from the persisted adjacency's one-time exchange, not
     from per-round AQE."""
-    from ..session import static_plan
-
     with static_plan(spark):
         return df.count()
 

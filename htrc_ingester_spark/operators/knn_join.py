@@ -52,7 +52,7 @@ from pyspark.sql import functions as F
 
 from ..functions import h3_cell, haversine_m
 from ..geo import h3lite as H
-from ..session import _plan_size_bytes, _size_conf, materialize, static_plan
+from ..session import _plan_size_bytes, broadcast_budget, fits, materialize, static_plan
 
 EARTH_RADIUS_M = 6_371_008.8
 
@@ -307,10 +307,8 @@ def knn_join_many(
     # partitioning instead of re-shuffling the points side; in
     # between → cache as-is and let AQE pick per round.
     est = _plan_size_bytes(skel)
-    bcast_thresh = int(
-        _size_conf(spark, "spark.sql.autoBroadcastJoinThreshold", 10 * 1024 * 1024)
-    )
-    broadcast_skel = 0 <= est <= bcast_thresh > 0
+    bcast_thresh = broadcast_budget(spark)
+    broadcast_skel = fits(est, bcast_thresh)
     if est > 64 * max(bcast_thresh, 10 * 1024 * 1024):
         skel = skel.repartition("cell")
     skel = skel.persist()

@@ -56,74 +56,12 @@ def _register_fn(name: str, fn: Callable, duck_sql: str | None) -> None:
     _REG[name] = (fn, duck_sql)
 
 
-# Catalog iteration order (VERDICT r4 #6, closing move): the driver's
-# per-round CORRECTNESS snapshot samples a ~50-entry PREFIX of this
-# dict (r3/r4 snapshots are exactly the first-registered entries), so
-# entries registered late in the file were never driver-sampled across
-# rounds 1-4 (43 of them — each still value-MATCHed by the full local
-# gate, scripts/driver_gate.py). Final round: surface exactly those 43
-# FIRST so every catalog entry ends the project with a driver-recorded
-# correctness sample, followed by the flagship family and the rest in
-# registration order. Pure reordering — the entry set, functions, and
-# oracles are unchanged.
-_NEVER_SAMPLED_R1_R4 = [
-    "pip_join_wkb_input",
-    "pip_join_many_polys",
-    "pip_join_wkb_table",
-    "pip_join_wkt_table",
-    "pip_join_table_cogroup",
-    "dedup_clusters",
-    "dedup_survivors",
-    "similarity_ivf_topk",
-    "similarity_ann_multiprobe",
-    "text_quality_full",
-    "dedup_winnow_pairs",
-    "w4_event_time_window",
-    "dedup_image_phash",
-    "dedup_image_clusters",
-    "knn_mutual_pairs",
-    "events_funnel_stages",
-    "phash_search_radius",
-    "zorder_layout_buckets",
-    "segment_intersect_roads",
-    "ring_metrics_polygons",
-    "geofence_transitions_rects",
-    "raster_isobands",
-    "trajectory_resample_ticks",
-    "quadkey_tile_hist",
-    "coverage_gaps_rects",
-    "raster_gradient_slope",
-    "tile_sample_topk",
-    "ingest_pipeline_e2e",
-    "pip_join_convex_oracle",
-    "segment_density_cells",
-    "events_cohort_retention",
-    "raster_cost_distance",
-    "trajectory_od_matrix",
-    "events_json_extract",
-    "events_moving_avg",
-    "events_cube_rollup",
-    "events_value_ntile",
-    "events_type_pivot",
-    "attribution_click_view",
-    "events_sliding_window",
-    "adaptive_multires_hist",
-    "events_value_anomalies",
-    "zonal_buffer_counts",
-]
-
-
-def _ordered_names() -> list[str]:
-    front = [n for n in _NEVER_SAMPLED_R1_R4 if n in _REG]
-    return front + [n for n in _REG if n not in set(front)]
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {k: _REG[k][0] for k in _ordered_names()}
+    return {k: fn for k, (fn, _) in _REG.items()}
 
 
 def oracle_sql() -> dict[str, str]:
-    return {k: _REG[k][1] for k in _ordered_names() if _REG[k][1] is not None}
+    return {k: sql for k, (_, sql) in _REG.items() if sql is not None}
 
 
 # ===========================================================================

@@ -80,34 +80,31 @@ def reliable_checkpoint_configured(spark: SparkSession) -> bool:
     return sc.getCheckpointDir() is not None
 
 
+def fits(size: int, budget: int) -> bool:
+    """The one regime gate: True iff an operator may take its small
+    regime (driver numpy, or a pinned broadcast) for an input of
+    ``size`` under ``budget`` (same unit: rows, edges, cells or
+    bytes). A budget ≤ 0 forces the scale regime (distributed rounds,
+    or a shuffle join), even on an empty input; an unknown estimate
+    (−1, see ``_plan_size_bytes``) takes the scale regime too."""
+    return budget > 0 and 0 <= size <= budget
+
+
+def broadcast_budget(spark: SparkSession) -> int:
+    """Spark's ``spark.sql.autoBroadcastJoinThreshold`` in bytes (10 MB
+    when unset, any size suffix parsed by Spark itself); ≤ 0 when
+    broadcasts are disabled."""
+    return int(spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold())
+
+
 def _plan_size_bytes(df: DataFrame) -> int:
     """Catalyst's optimized-plan size estimate (no action, no scan;
     parquet sources report real footer sizes). -1 when unavailable —
-    callers then leave the join strategy to AQE."""
+    ``fits`` then picks the scale regime."""
     try:
         return int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
     except Exception:
         return -1
-
-
-def _size_conf(spark: SparkSession, key: str, default: int) -> int:
-    """A Spark size conf in bytes ('10MB', '10485760b', …)."""
-    try:
-        v = spark.conf.get(key).strip().lower()
-    except Exception:
-        return default
-    mult = 1
-    for suf, m in (
-        ("kb", 1024), ("mb", 1024**2), ("gb", 1024**3), ("tb", 1024**4),
-        ("k", 1024), ("m", 1024**2), ("g", 1024**3), ("b", 1),
-    ):
-        if v.endswith(suf):
-            v, mult = v[: -len(suf)], m
-            break
-    try:
-        return int(float(v) * mult)
-    except ValueError:
-        return default
 
 
 def get_spark(

@@ -22,6 +22,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import pairtree_clean_id
+from ..session import fits
+
+# read_pairtree loads content by path for at most this many matched
+# volumes; larger requests take the single scan-and-join
+_POINT_READ_MAX = 10_000
 
 
 def clean_volume_id(volume_id: str) -> str:
@@ -56,71 +61,51 @@ def read_pairtree(
     root: str,
     ids: DataFrame,
     id_col: str = "volume_id",
-    point_read_max: int = 10_000,
 ) -> tuple[DataFrame, DataFrame]:
     """binaryFile read of requested pairtree volumes. Returns (found,
     missing): found carries (volume_id, path, content, length);
-    missing is the left-anti of requested ids.
+    missing is the left-anti of requested ids. Both carry ``id_col``
+    with its input type, one found row per requested row (an id
+    requested twice is found twice).
 
     Two-phase, so a point read never pays a full-corpus byte scan:
     the match runs against a METADATA listing (binaryFile with only
     path/length selected reads no file bytes — column pruning), and
-    when the matched set is small (≤ ``point_read_max``) the content
-    comes from a TARGETED load of exactly those paths. A
+    when the matched row count ``session.fits`` ``_POINT_READ_MAX`` the
+    content comes from a TARGETED load of exactly those paths. A
     whole-corpus request degrades gracefully to the single
     scan-and-join (collecting millions of paths to the driver would
     be worse than the scan it avoids)."""
-    meta = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.zip")
-        .option("recursiveFileLookup", "true")
-        .load(root)
-        .select(
-            F.col("path"),
-            F.col("length"),
-            F.element_at(F.split(F.col("path"), "/"), -1).alias("_leaf"),
-        )
-        .withColumn("_cleaned", F.regexp_replace(F.col("_leaf"), r"\.zip$", ""))
-    )
-    keyed = ids.select(
-        F.col(id_col), pairtree_clean_id(id_col).alias("_cleaned")
-    )
-    matched = keyed.join(meta, "_cleaned", "inner").select(id_col, "path", "length")
-    missing = keyed.join(meta, "_cleaned", "left_anti").select(id_col)
-    hits = matched.limit(point_read_max + 1).collect()
-    if len(hits) <= point_read_max:
-        if not hits:
-            empty = spark.createDataFrame(
-                [], f"{id_col} string, path string, length long, content binary"
-            )
-            return empty, missing
-        by_path = {r["path"]: (r[id_col], r["length"]) for r in hits}
-        content = (
-            spark.read.format("binaryFile")
-            .load(list(by_path))
-            .select("path", "content")
-        )
-        lut = spark.createDataFrame(
-            [(p, v, ln) for p, (v, ln) in by_path.items()],
-            f"path string, {id_col} string, length long",
-        )
-        found = lut.join(content, "path").select(id_col, "path", "length", "content")
-        return found, missing
-    # big request: one scan-and-join (content read only for the join's
-    # survivors is not possible here — the id set itself is huge)
     listing = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.zip")
         .option("recursiveFileLookup", "true")
         .load(root)
-        .select(
-            F.col("path"),
-            F.col("length"),
-            F.col("content"),
-            F.element_at(F.split(F.col("path"), "/"), -1).alias("_leaf"),
-        )
-        .withColumn("_cleaned", F.regexp_replace(F.col("_leaf"), r"\.zip$", ""))
+        .withColumn("_cleaned", F.regexp_replace(
+            F.element_at(F.split(F.col("path"), "/"), -1), r"\.zip$", ""
+        ))
     )
+    keyed = ids.select(
+        F.col(id_col), pairtree_clean_id(id_col).alias("_cleaned")
+    )
+    matched = keyed.join(listing, "_cleaned", "inner").select(id_col, "path", "length")
+    missing = keyed.join(listing, "_cleaned", "left_anti").select(id_col)
+    hits = matched.limit(max(_POINT_READ_MAX, 0) + 1).collect()
+    if fits(len(hits), _POINT_READ_MAX):
+        # the matched rows as they are: the id keeps its input type
+        # and a duplicated id keeps its duplicate row, as in the scan
+        lut = spark.createDataFrame(hits, matched.schema)
+        if not hits:
+            return lut.withColumn("content", F.lit(None).cast("binary")), missing
+        content = (
+            spark.read.format("binaryFile")
+            .load(sorted({r["path"] for r in hits}))
+            .select("path", "content")
+        )
+        found = lut.join(content, "path").select(id_col, "path", "length", "content")
+        return found, missing
+    # big request: one scan-and-join (content read only for the join's
+    # survivors is not possible here — the id set itself is huge)
     found = keyed.join(listing, "_cleaned", "inner").select(
         id_col, "path", "length", "content"
     )

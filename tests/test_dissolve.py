@@ -27,19 +27,6 @@ def cells_df(spark, xy, res: int = RES, values=None):
     return spark.createDataFrame(pdf)
 
 
-@pytest.mark.parametrize("entry,schema,kw", [
-    ("connected_components", "cell long", {"res": RES, "driver_max_cells": 0}),
-    ("connected_components_edges", "id_a long, id_b long", {"driver_max_edges": 0}),
-])
-def test_zero_budget_forces_loop_on_empty_input(spark, monkeypatch, entry, schema, kw):
-    """A budget of 0 must run the distributed loop even with no input
-    rows (0 <= 0 used to take the driver path)."""
-    calls, real = [], DV._cc_loop
-    monkeypatch.setattr(DV, "_cc_loop", lambda *a: calls.append(1) or real(*a))
-    out = getattr(DV, entry)(spark.createDataFrame([], schema), **kw)
-    assert out.count() == 0 and calls == [1]
-
-
 class TestConnectedComponents:
     def test_two_blobs_and_a_snake(self, spark):
         # blob A: 2x2 at (10,10); blob B: single cell at (50,50);
@@ -72,7 +59,7 @@ class TestConnectedComponents:
         got = DV.connected_components(cells_df(spark, xy), RES).toPandas()
         assert got.comp.nunique() == 2
 
-    def test_distributed_loop_matches_driver_unionfind(self, spark):
+    def test_distributed_loop_matches_driver_unionfind(self, spark, scale_regime):
         rng = np.random.default_rng(7)
         xy = {(int(x), int(y)) for x, y in zip(rng.integers(0, 64, 300), rng.integers(0, 48, 300))}
         df = cells_df(spark, sorted(xy))
@@ -80,10 +67,11 @@ class TestConnectedComponents:
             DV.connected_components(df, RES)
             .toPandas().sort_values("cell").reset_index(drop=True)
         )
-        dist = (
-            DV.connected_components(df, RES, driver_max_cells=0)
-            .toPandas().sort_values("cell").reset_index(drop=True)
-        )
+        with scale_regime():
+            dist = (
+                DV.connected_components(df, RES)
+                .toPandas().sort_values("cell").reset_index(drop=True)
+            )
         pd.testing.assert_frame_equal(drv, dist)
 
     def test_matches_pure_python_bfs_oracle(self, spark):
@@ -137,24 +125,27 @@ class TestEdgeComponents:
         assert m["a"] == m["b"] == m["c"] == "a"  # chain is transitive
         assert m["x"] == m["y"] == "x"
 
-    def test_distributed_loop_matches_driver_on_edges(self, spark):
+    def test_distributed_loop_matches_driver_on_edges(self, spark, scale_regime):
         rng = np.random.default_rng(3)
         pairs = pd.DataFrame(
             {"id_a": rng.integers(0, 200, 300), "id_b": rng.integers(0, 200, 300)}
         ).query("id_a != id_b")
         df = spark.createDataFrame(pairs)
-        drv = (
-            DV.connected_components_edges(df)
-            .toPandas().sort_values("node").reset_index(drop=True)
-        )
-        dist = (
-            DV.connected_components_edges(df, driver_max_edges=0)
-            .toPandas().sort_values("node").reset_index(drop=True)
-        )
-        pd.testing.assert_frame_equal(
-            drv.astype({"node": "int64", "cluster": "int64"}),
-            dist.astype({"node": "int64", "cluster": "int64"}),
-        )
+
+        def run():
+            got = DV.connected_components_edges(df).toPandas()
+            return got.sort_values("node", ignore_index=True).astype("int64")
+
+        drv, static_budget = run(), DV._STATIC_LOOP_MAX_BYTES
+        with scale_regime():
+            adaptive = run()  # the loop's rounds under AQE
+            # past the driver budget but under the static one: the
+            # loop's rounds run with AQE off
+            with pytest.MonkeyPatch.context() as mp:
+                mp.setattr(DV, "_STATIC_LOOP_MAX_BYTES", static_budget)
+                static = run()
+        pd.testing.assert_frame_equal(drv, adaptive)
+        pd.testing.assert_frame_equal(drv, static)
 
 
 class TestRegionOverlay:

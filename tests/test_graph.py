@@ -5,6 +5,7 @@ multi-source, parallel-edge collapse, persist_every parity."""
 from __future__ import annotations
 
 import random
+from contextlib import nullcontext
 
 import pytest
 
@@ -41,13 +42,14 @@ def _run(spark, edges, sources, hops, **kw):
 
 
 @pytest.mark.parametrize("seed", [1, 2, 3])
-@pytest.mark.parametrize("driver_max", [2_000_000, 0])
-def test_matches_bellman_ford_oracle(spark, seed, driver_max):
-    # both regimes: the bounded driver numpy Bellman-Ford (default for
-    # collapsed adjacencies ≤ 2M edges) and the distributed iterative
-    # rounds (driver_max_edges=0 forces them) must match the oracle
+@pytest.mark.parametrize("edge_budget", [2_000_000, 0])
+def test_matches_bellman_ford_oracle(spark, scale_regime, seed, edge_budget):
+    # both regimes: the bounded driver numpy Bellman-Ford (the default
+    # 2M-edge budget) and the distributed iterative rounds (budget 0,
+    # the scale_regime fixture) must match the oracle
     edges = random_graph(seed)
-    got = _run(spark, edges, [0], hops=4, driver_max_edges=driver_max)
+    with scale_regime() if edge_budget == 0 else nullcontext():
+        got = _run(spark, edges, [0], hops=4)
     assert got == bf_oracle(edges, [0], 4)
 
 
@@ -78,18 +80,20 @@ def test_parallel_edges_and_self_loops_collapse(spark):
     assert got == {0: 0, 1: 2}
 
 
-def test_persist_every_same_result(spark):
+def test_persist_every_same_result(spark, scale_regime):
     # persist_every only exists in the distributed regime; force it
     edges = random_graph(7)
-    a = _run(spark, edges, [0], hops=5, driver_max_edges=0)
-    b = _run(spark, edges, [0], hops=5, persist_every=2, driver_max_edges=0)
+    with scale_regime():
+        a = _run(spark, edges, [0], hops=5)
+        b = _run(spark, edges, [0], hops=5, persist_every=2)
     assert a == b
 
 
-def test_driver_and_distributed_regimes_agree(spark):
+def test_driver_and_distributed_regimes_agree(spark, scale_regime):
     edges = random_graph(11, n_nodes=40, n_edges=120)
     a = _run(spark, edges, [0, 5], hops=6)
-    b = _run(spark, edges, [0, 5], hops=6, driver_max_edges=0)
+    with scale_regime():
+        b = _run(spark, edges, [0, 5], hops=6)
     assert a == b
 
 
@@ -101,25 +105,15 @@ def test_hops_zero_is_sources_only(spark):
 class TestGraphEdgeContracts:
     """r5 review regressions."""
 
-    def test_null_edge_fields_raise_in_both_regimes(self, spark):
+    def test_null_edge_fields_raise_in_both_regimes(self, spark, scale_regime):
         from htrc_ingester_spark.operators.graph import shortest_paths
 
         e = spark.createDataFrame(
             [(1, 2, 5), (2, None, 3)], "src long, dst long, w long"
         )
-        for dme in (2_000_000, 0):
-            with pytest.raises(Exception, match="NULL dst"):
-                shortest_paths(e, [1], hops=2, driver_max_edges=dme).collect()
-
-    def test_force_distributed_holds_on_empty_adjacency(self, spark):
-        """driver_max_edges=0 must force the distributed rounds even
-        when the collapsed adjacency is EMPTY (0 <= 0 silently took
-        the driver path)."""
-        from htrc_ingester_spark.operators.graph import shortest_paths
-
-        e = spark.createDataFrame([], "src long, dst long, w long")
-        out = shortest_paths(e, [7], hops=2, driver_max_edges=0).toPandas()
-        assert list(out.node) == [7] and list(out.dist) == [0]
+        for regime in (nullcontext, scale_regime):
+            with regime(), pytest.raises(Exception, match="NULL dst"):
+                shortest_paths(e, [1], hops=2).collect()
 
     def test_driver_regime_overflow_raises(self, spark):
         from htrc_ingester_spark.operators.graph import shortest_paths

@@ -280,10 +280,10 @@ class TestRound2PlanShapes:
         assert "BroadcastHashJoin" in plan
         assert "SortMergeJoin" not in plan
 
-    def test_ann_broadcast_guard_both_shapes(self, spark):
+    def test_ann_broadcast_guard_both_shapes(self, spark, scale_regime):
         # VERDICT r2: the query-side broadcast must be a GUARDED hint —
-        # pinned when the query frame is estimably small, absent when
-        # forced off (the 10^8-query regime where the hint would OOM)
+        # pinned when the query frame is estimably small, absent in the
+        # scale regime (the 10^8-query batch where the hint would OOM)
         from htrc_ingester_spark.operators.embedding import ann_topk, ivf_topk
 
         rng = __import__("numpy").random.default_rng(2)
@@ -302,19 +302,19 @@ class TestRound2PlanShapes:
         )
         for fn in (ann_topk, ivf_topk):
             # optimized logical plan carries the hint before AQE runs
-            hinted = fn(data_df, q, k=3, broadcast_queries=None)
+            hinted = fn(data_df, q, k=3)
             logical = hinted._jdf.queryExecution().optimizedPlan().toString()
             assert "broadcast" in logical.lower(), fn.__name__
-            off = fn(data_df, q, k=3, broadcast_queries=False)
-            logical_off = off._jdf.queryExecution().optimizedPlan().toString()
+            with scale_regime():
+                off = fn(data_df, q, k=3)
+                logical_off = off._jdf.queryExecution().optimizedPlan().toString()
+                b = off.toPandas().reset_index(drop=True)
             assert "broadcast" not in logical_off.lower(), fn.__name__
             # MATCH unchanged between the two shapes
             a = hinted.toPandas().reset_index(drop=True)
-            b = off.toPandas().reset_index(drop=True)
             pd.testing.assert_frame_equal(a, b)
 
-    def test_lsh_verify_autodecide_shapes(self, spark):
-        from htrc_ingester_spark.operators import textdedup as TD
+    def test_lsh_verify_autodecide_shapes(self, spark, scale_regime):
         from htrc_ingester_spark.operators.textdedup import lsh_near_dup_pairs
 
         docs = spark.createDataFrame(
@@ -328,7 +328,8 @@ class TestRound2PlanShapes:
         )
         auto_df = lsh_near_dup_pairs(docs, max_bucket=50)
         auto = auto_df.toPandas()
-        forced_off = lsh_near_dup_pairs(docs, max_bucket=50, broadcast_verify=False).toPandas()
+        with scale_regime():
+            forced_off = lsh_near_dup_pairs(docs, max_bucket=50).toPandas()
         pd.testing.assert_frame_equal(
             auto.sort_values(["id_a", "id_b"]).reset_index(drop=True),
             forced_off.sort_values(["id_a", "id_b"]).reset_index(drop=True),
@@ -338,7 +339,6 @@ class TestRound2PlanShapes:
         # guard now — no scheduled decision job)
         plan = auto_df._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastHashJoin" in plan
-        assert TD  # module imported for parity with the other shapes
 
 
 class TestCatalogWidePlanAudit:

@@ -6,6 +6,8 @@ strategy with a synthesized fixture instead of a shipped one)."""
 
 from __future__ import annotations
 
+from contextlib import nullcontext
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -88,6 +90,29 @@ class TestPairtree:
         assert list(got.volume_id) == sorted(ids)
         assert bytes(got.content.iloc[0]) == f"payload-{sorted(ids)[0]}".encode()
         assert [r.volume_id for r in missing.collect()] == ["missing.id"]
+
+    @pytest.mark.parametrize("schema,ids,stored", [
+        ("volume_id string", ["a.id/1", "a.id/1", "b.id/2"], ["a.id/1", "b.id/2"]),
+        ("volume_id bigint", [101, 202], ["101", "202"]),
+        ("volume_id bigint", [303], ["101"]),
+    ])
+    def test_point_read_and_scan_return_identical_frames(
+        self, spark, tmp_path, scale_regime, schema, ids, stored
+    ):
+        """The point read (default) and the scan-and-join (scale
+        regime) share one contract: one found row per requested row
+        that is stored, and the id column keeps its input type."""
+        rows = [(v, f"payload-{v}".encode()) for v in stored]
+        FS.write_pairtree(spark.createDataFrame(rows, "volume_id string, content binary"), str(tmp_path))
+        req = spark.createDataFrame([(i,) for i in ids], schema)
+        frames = []
+        for regime in (nullcontext, scale_regime):
+            with regime():
+                found, _ = FS.read_pairtree(spark, str(tmp_path), req)
+                frames.append((found.schema, sorted(found.collect())))
+        assert frames[0] == frames[1]
+        assert frames[0][0]["volume_id"].dataType.simpleString() == schema.split()[1]
+        assert len(frames[0][1]) == sum(str(i) in stored for i in ids)
 
     def test_segment_path_shape(self, spark, tmp_path):
         df = spark.createDataFrame([("uc2.ark:/13960/ta", b"x")], "volume_id string, content binary")

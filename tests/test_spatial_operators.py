@@ -1,6 +1,8 @@
 """E2E Spark tests for PIP join, tile assignment, and kNN — each checked
 against an independent pure-Python oracle (SURVEY.md §5.2 item 2)."""
 
+from contextlib import nullcontext
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -494,6 +496,28 @@ class TestKNNMany:
                     tasks += [status.lastStageAttempt(int(s)).numTasks() for s in sids] or [1]
         assert tasks, "no candidate collect_list found under the job tag"
         assert set(tasks) == {int(spark.conf.get("spark.sql.shuffle.partitions"))}
+
+    def test_skeleton_regimes_agree(self, spark, scale_regime, monkeypatch):
+        """The pinned-broadcast skeleton (static rounds) and the
+        un-pinned one (AQE per round, the scale regime) return the
+        same frame."""
+        from htrc_ingester_spark.operators import knn_join as KJ
+        from htrc_ingester_spark.session import fits
+
+        rng = np.random.default_rng(5)
+        pts = spark.createDataFrame(data.images_meta_pdf(3000, seed=5))
+        q = spark.createDataFrame(pd.DataFrame({
+            "query_id": [f"q{i:02d}" for i in range(20)], "k": 5,
+            "lon": rng.uniform(-130.0, 30.0, 20), "lat": rng.uniform(-40.0, 60.0, 20),
+        }))
+        gates, got = [], []
+        monkeypatch.setattr(KJ, "fits", lambda s, b: gates.append(fits(s, b)) or gates[-1])
+        for regime in (nullcontext, scale_regime):
+            with regime():
+                out = KJ.knn_join_many(spark, pts, q, res=5).toPandas()
+            got.append(out.sort_values(["query_id", "rank"], ignore_index=True))
+        assert gates == [True, False] and len(got[0]) == 100
+        pd.testing.assert_frame_equal(got[0], got[1])
 
 
 class TestKNNDispatch:

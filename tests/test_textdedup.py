@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import hashlib
 import re
+from contextlib import nullcontext
 
 import numpy as np
 import pandas as pd
@@ -234,31 +235,38 @@ class TestPhashNearDup:
 
 
 class TestPhashSearch:
-    def test_radius_search_complete_vs_bruteforce(self, spark):
+    def test_radius_search_complete_vs_bruteforce(self, spark, scale_regime):
         """phash_search finds EVERY image within hamming ≤3 of each
         query (pigeonhole completeness), ranks by (hamming, image_id),
-        truncates at k — all verified against a python brute force."""
+        truncates at k — all verified against a python brute force,
+        with the query side broadcast (default) and not (scale regime)."""
         from htrc_ingester_spark.operators.embedding import phash_search
 
         imgs = [(i, (i * 0x9E3779B97F4A7C15) & 0x7FFFFFFFFFFFFFFF) for i in range(300)]
         # planted in-radius neighbors of image 5's phash
         imgs += [(900, imgs[5][1]), (901, imgs[5][1] ^ 0b11), (902, imgs[5][1] ^ (1 << 50))]
         df = spark.createDataFrame(imgs, "image_id long, phash long")
+        # pandas-built: a LocalRelation, small enough to broadcast
         queries = spark.createDataFrame(
-            [(5, imgs[5][1]), (17, imgs[17][1])], "query_id long, phash long"
+            pd.DataFrame({"query_id": [5, 17], "phash": [imgs[5][1], imgs[17][1]]})
         )
-        got = phash_search(df, queries, max_hamming=3, k=10).toPandas()
 
         def ham(x, y):
             return bin((x ^ y) & 0xFFFFFFFFFFFFFFFF).count("1")
 
-        for qid, qph in [(5, imgs[5][1]), (17, imgs[17][1])]:
-            want = sorted(
-                (ham(qph, ph), i) for i, ph in imgs if ham(qph, ph) <= 3
-            )[:10]
-            sub = got[got.query_id == qid].sort_values("rank")
-            assert [(int(h), int(i)) for h, i in zip(sub.hamming, sub.image_id)] == want
-            assert list(sub["rank"]) == list(range(1, len(want) + 1))
+        for regime, pinned in ((nullcontext, True), (scale_regime, False)):
+            with regime():
+                out = phash_search(df, queries, max_hamming=3, k=10)
+                plan = out._jdf.queryExecution().optimizedPlan().toString()
+                got = out.toPandas()
+            assert ("broadcast" in plan.lower()) == pinned
+            for qid, qph in [(5, imgs[5][1]), (17, imgs[17][1])]:
+                want = sorted(
+                    (ham(qph, ph), i) for i, ph in imgs if ham(qph, ph) <= 3
+                )[:10]
+                sub = got[got.query_id == qid].sort_values("rank")
+                assert [(int(h), int(i)) for h, i in zip(sub.hamming, sub.image_id)] == want
+                assert list(sub["rank"]) == list(range(1, len(want) + 1))
 
     def test_radius_beyond_pigeonhole_raises(self, spark):
         from htrc_ingester_spark.operators.embedding import phash_search
@@ -494,15 +502,17 @@ class TestDecontaminate:
         assert 10 not in got and 12 not in got          # contaminated dropped
         assert {11, 13, 14} <= got                      # clean + short kept
 
-    def test_broadcast_shapes_same_result(self, spark):
+    def test_broadcast_shapes_same_result(self, spark, scale_regime):
         corpus = spark.createDataFrame(pd.DataFrame(self.CORPUS, columns=["doc_id", "text"]))
         bench = spark.createDataFrame(pd.DataFrame(self.BENCH, columns=["doc_id", "text"]))
-        a = TD.decontaminate(corpus, bench, k=5, broadcast_bench=True)
-        b = TD.decontaminate(corpus, bench, k=5, broadcast_bench=False)
-        assert {r.doc_id for r in a.collect()} == {r.doc_id for r in b.collect()}
-        pa = a._jdf.queryExecution().executedPlan().toString()
-        pb = b._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastHashJoin" in pa
+        a = TD.decontaminate(corpus, bench, k=5)
+        with scale_regime():
+            b = TD.decontaminate(corpus, bench, k=5)
+            got_b = {r.doc_id for r in b.collect()}
+            pb = b._jdf.queryExecution().executedPlan().toString()
+        assert {r.doc_id for r in a.collect()} == got_b
+        assert "BroadcastHashJoin" in a._jdf.queryExecution().executedPlan().toString()
+        assert "BroadcastHashJoin" not in pb
 
 
 class TestRepetitionStats:
@@ -604,27 +614,25 @@ class TestR5ReviewRegressions:
         with pytest.raises(ValueError, match="hash_impl"):
             TD.minhash_signatures(docs_df, hash_impl="xxh64")
 
-    def test_broadcast_verify_false_forces_shuffle_join(self, docs_df):
-        """False must be distinguishable from None: the verify joins
-        carry a merge hint that survives AQE. Compared against True on
-        the same input (the un-hinted pair-gen self-join may broadcast
-        either way, so the assertion is RELATIVE): forcing off must
-        yield strictly fewer broadcast joins and at least the three
-        hinted verify joins as sort-merge."""
-        def plan_of(bv):
+    def test_broadcast_verify_false_forces_shuffle_join(self, docs_df, scale_regime):
+        """The verify-join broadcast is AQE's runtime decision alone:
+        under the scale_regime fixture (broadcast thresholds -1) the
+        three verify joins run sort-merge, where the default plan
+        broadcasts on the same input."""
+        def plan_of():
             # the operator persists its candidate/doc intermediates;
             # clear them so each variant plans from scratch instead of
             # canonicalizing onto the other's cache entries
             docs_df.sparkSession.catalog.clearCache()
-            out = TD.lsh_near_dup_pairs(
-                docs_df, jaccard_threshold=0.5, broadcast_verify=bv
-            )
+            out = TD.lsh_near_dup_pairs(docs_df, jaccard_threshold=0.5)
             out.count()
             return out._jdf.queryExecution().executedPlan().toString()
 
-        p_false, p_true = plan_of(False), plan_of(True)
-        assert p_false.count("SortMergeJoin") >= 3
-        assert p_false.count("BroadcastHashJoin") < p_true.count("BroadcastHashJoin")
+        p_default = plan_of()
+        with scale_regime():
+            p_forced = plan_of()
+        assert p_forced.count("SortMergeJoin") >= 3
+        assert p_forced.count("BroadcastHashJoin") < p_default.count("BroadcastHashJoin")
 
 
 class TestEmbeddingEdgeContracts:
